@@ -117,7 +117,10 @@ object Health {
     val avgX = avg(x).over(w)
     val avgY = avg(col(value)).over(w)
     val sdY = stddev_samp(col(value)).over(w)
-    val r = corr(col(value), x).over(w)
+    // r in DuckDB's CORR form, cov / (σy·σx); NULL on a zero-variance
+    // prefix, where Spark's corr divides by zero under ANSI
+    val sdYX = stddev_pop(col(value)).over(w) * stddev_pop(x).over(w)
+    val r = when(sdYX > 0, covar_pop(col(value), x).over(w) / sdYX)
     val step = (max(x).over(w) - min(x).over(w)) / (n - lit(1))
     val xNext = x + step
     val fc = avgY + slope * (xNext - avgX)

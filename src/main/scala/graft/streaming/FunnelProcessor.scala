@@ -25,10 +25,10 @@ private final case class FunnelSt(stage: Int, t1: Long, t2: Long, t3: Long,
   * the first purchase strictly after that — exactly the batch q95
   * semantics (`ops/Temporal`), which the parity spec replays.
   *
-  * Same two-phase shape as [[HealthStateProcessor]]: out-of-order
-  * events buffer in a watermark-bounded ListState, then fold in
-  * (event-time, event_id) order once ripe, so arrival order never
-  * changes the match. State per key beyond the pending buffer is O(1)
+  * Two phases, because a funnel stage depends on event order (unlike a
+  * window sum): out-of-order events buffer in a watermark-bounded
+  * ListState, then fold in (event-time, event_id) order once ripe, so
+  * arrival order never changes the match. State per key beyond the pending buffer is O(1)
   * (stage + three timestamps) — the property that holds at 100 M keys.
   * A snapshot is emitted when the key first appears and whenever the
   * stage advances; the latest snapshot per key is the funnel table.

@@ -35,127 +35,93 @@ private[streaming] final case class BucketAcc(startMs: Long, sum: Double, count:
   * Spark has no streaming OVER aggregate (SURVEY.md §7.4), so the
   * per-key event-ordered cumulative M1/M2 state is hand-built here:
   *
-  *  1. out-of-order events buffer in a ListState until the watermark
-  *     passes them, then fold in event-time order (event-time
-  *     correctness under any arrival order — the reference's Kafka
-  *     source is round-robin partitioned, §3.2);
-  *  2. tumbling `windowMs` buckets aggregate AVG (statement [2]'s
-  *     1-second TUMBLE); a bucket closes when the watermark passes its
-  *     end — Flink TUMBLE emission semantics;
+  *  1. each event is summed straight into the accumulator of its
+  *     tumbling `windowMs` window (statement [2]'s 1-second TUMBLE AVG).
+  *     Open windows live in a map keyed by window start; a micro-batch's
+  *     rows are first summed per window in memory, then merged with one
+  *     read-modify-write per window. A sum and a count are commutative,
+  *     so arrival order cannot change a window (the reference's Kafka
+  *     source is round-robin partitioned, §3.2) and no raw row is kept;
+  *  2. one event-time timer per window end, registered once when the
+  *     window opens. A window closes when the watermark reaches its end
+  *     — Flink TUMBLE emission semantics. Every close step emits ALL
+  *     open windows with end ≤ watermark in start order, so the result
+  *     does not depend on the order Spark delivers expired timers in;
   *  3. each closed window is scored against the Welford prior model
   *     (M1, z-score prediction interval, warm-up `minTraining`);
   *  4. normal windows (statement [3]'s is_anomaly = FALSE filter) feed
   *     the OLS trend state and emit a 1-step forecast with bounds (M2)
   *     and the `forecast < alertThreshold` alert flag (statement [4]).
   *
-  * State per key is O(1) beyond the watermark-bounded pending buffer
-  * (delay × event rate): one BucketAcc + WelfordState + RegState — the
-  * property that holds at 100 M keys. Fusing the four statements into
-  * one operator keeps the whole chain to a single shuffle and a single
-  * state store; the reference's four separate Flink jobs re-shuffle the
-  * same patient_id key three times.
+  * Late data: Spark drops rows at or behind the PREVIOUS batch's
+  * watermark before the processor sees them (counted in the query's
+  * `numRowsDroppedByWatermark`), and every window that has closed ended
+  * at or before that watermark — so a delivered row always lands in a
+  * window that is still open, and nothing is dropped silently here.
+  *
+  * State per key is O(open windows) ≈ delay / `windowMs` + 1
+  * accumulators, plus one WelfordState + RegState — independent of the
+  * event rate. Fusing the four statements into one operator keeps the
+  * whole chain to a single shuffle and a single state store; the
+  * reference's four separate Flink jobs re-shuffle the same patient_id
+  * key three times.
   */
 class HealthStateProcessor(windowMs: Long, minTraining: Int,
     confidencePercentage: Double, alertThreshold: Double, originMs: Long)
     extends StatefulProcessor[Int, VitalPoint, HealthScore] {
 
-  @transient private var pending: ListState[VitalPoint] = _
-  @transient private var bucket: ValueState[BucketAcc] = _
+  @transient private var open: MapState[Long, BucketAcc] = _
   @transient private var model: ValueState[WelfordState] = _
   @transient private var trend: ValueState[RegState] = _
-  @transient private var armedTimer: ValueState[Long] = _
 
   protected val z: Double = Stats.normalQuantile(0.5 + confidencePercentage / 200.0)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    pending = getHandle.getListState("pending", Encoders.product[VitalPoint], TTLConfig.NONE)
-    bucket = getHandle.getValueState("bucket", Encoders.product[BucketAcc], TTLConfig.NONE)
+    open = getHandle.getMapState("open", Encoders.scalaLong,
+      Encoders.product[BucketAcc], TTLConfig.NONE)
     model = getHandle.getValueState("model", Encoders.product[WelfordState], TTLConfig.NONE)
     trend = getHandle.getValueState("trend", Encoders.product[RegState], TTLConfig.NONE)
-    armedTimer = getHandle.getValueState("armedTimer", Encoders.scalaLong, TTLConfig.NONE)
   }
-
-  private def bucketStartOf(ts: Long): Long =
-    ts - java.lang.Math.floorMod(ts - originMs, windowMs)
 
   override def handleInputRows(key: Int, rows: Iterator[VitalPoint],
       timerValues: TimerValues): Iterator[HealthScore] = {
+    val batch = scala.collection.mutable.LongMap.empty[BucketAcc]
+    rows.foreach { p =>
+      val ts = p.event_time.getTime
+      val start = ts - java.lang.Math.floorMod(ts - originMs, windowMs)
+      val b = batch.getOrElse(start, BucketAcc(start, 0.0, 0L))
+      batch.update(start, BucketAcc(start, b.sum + p.value, b.count + 1))
+    }
     val wm = timerValues.getCurrentWatermarkInMs()
-    // Late-data semantics: Spark's stateful operators drop rows with
-    // ts <= watermark BEFORE the processor sees them (verified by
-    // StreamingHealthSpec's late-event test), so every delivered row is
-    // on-time by construction — slightly stricter than Flink's TUMBLE
-    // rule (drop only once the window fired), and equivalent to the
-    // reference's drop-late default for any in-delay arrival. The guard
-    // below is defense-in-depth only: it would refuse any row whose
-    // window already fired, so a closed window can never reopen.
-    rows.filter(p => bucketStartOf(p.event_time.getTime) + windowMs > wm)
-      .foreach(pending.appendValue)
-    drainAndRearm(key, wm)
+    batch.foreachValue { b =>
+      if (open.containsKey(b.startMs)) {
+        val cur = open.getValue(b.startMs)
+        open.updateValue(b.startMs, BucketAcc(b.startMs, cur.sum + b.sum, cur.count + b.count))
+      } else {
+        open.updateValue(b.startMs, b)
+        // a window that is already ripe closes below, without a timer
+        if (b.startMs + windowMs > wm) getHandle.registerTimer(b.startMs + windowMs)
+      }
+    }
+    closeRipe(key, wm)
   }
 
   override def handleExpiredTimer(key: Int, timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[HealthScore] =
-    drainAndRearm(key, timerValues.getCurrentWatermarkInMs())
+    closeRipe(key, timerValues.getCurrentWatermarkInMs())
 
-  /** Drain, then re-arm an event-time timer at the open bucket's end (or
-    * the earliest still-pending event) so the state keeps making
-    * progress on watermark advance alone, with no further input for
-    * this key. */
-  private def drainAndRearm(key: Int, watermarkMs: Long): Iterator[HealthScore] = {
-    val out = drain(key, watermarkMs)
-    val nextDue =
-      Option(bucket.get()).map(_.startMs + windowMs) ++
-        pending.get().map(_.event_time.getTime).minOption
-    val prev = if (armedTimer.exists()) Some(armedTimer.get()) else None
-    nextDue.minOption match {
-      case Some(t0) =>
-        val t = math.max(t0, watermarkMs + 1)
-        // keep exactly one pending timer per key — re-arming every batch
-        // without deleting would grow timer state with batch count
-        if (!prev.contains(t)) {
-          prev.filter(_ > watermarkMs).foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(t)
-          armedTimer.update(t)
-        }
-      case None =>
-        prev.filter(_ > watermarkMs).foreach(getHandle.deleteTimer)
-        armedTimer.clear()
-    }
-    out.iterator
-  }
-
-  /** Fold every pending event with ts <= watermark, in event-time order,
-    * through bucket assignment and model scoring; close any bucket whose
-    * end the watermark has passed. */
-  private def drain(key: Int, watermarkMs: Long): Seq[HealthScore] = {
-    val all = pending.get().toSeq
-    val (ripe, wait) = all.partition(_.event_time.getTime <= watermarkMs)
-    if (ripe.isEmpty && !Option(bucket.get()).exists(_.startMs + windowMs <= watermarkMs))
-      return Nil
-    pending.clear()
-    if (wait.nonEmpty) pending.appendList(wait.toArray)
-
-    val out = Seq.newBuilder[HealthScore]
-    ripe.sortBy(_.event_time.getTime).foreach { p =>
-      val start = bucketStartOf(p.event_time.getTime)
-      Option(bucket.get()) match {
-        case Some(b) if b.startMs == start =>
-          bucket.update(BucketAcc(b.startMs, b.sum + p.value, b.count + 1))
-        case Some(b) =>
-          out += closeBucket(key, b)
-          bucket.update(BucketAcc(start, p.value, 1))
-        case None =>
-          bucket.update(BucketAcc(start, p.value, 1))
-      }
-    }
-    Option(bucket.get()).foreach { b =>
-      if (b.startMs + windowMs <= watermarkMs) {
-        out += closeBucket(key, b)
-        bucket.clear()
-      }
-    }
-    out.result()
+  /** Emit and remove every open window whose end the watermark has
+    * reached, oldest first (the scoring state folds windows in event
+    * time order). Only these few accumulators are ordered — never rows. */
+  private def closeRipe(key: Int, watermarkMs: Long): Iterator[HealthScore] = {
+    val ripe = open.iterator().collect {
+      case (start, b) if start + windowMs <= watermarkMs => b
+    }.toList.sortBy(_.startMs)
+    // strict: state may only be touched while Spark has this key set
+    ripe.map { b =>
+      open.removeKey(b.startMs)
+      closeBucket(key, b)
+    }.iterator
   }
 
   /** Statement [2b]+[3]+[4] for one closed window. Protected so model

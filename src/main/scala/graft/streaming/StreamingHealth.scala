@@ -36,20 +36,10 @@ object StreamingHealth {
   def score(events: DataFrame, watermarkDelay: String,
       windowMs: Long = DefaultWindowMs, minTraining: Int = 30,
       confidencePercentage: Double = 95.0, alertThreshold: Double = 40.0,
-      originMs: Long = Health.OriginMs): Dataset[HealthScore] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("patient_id").cast("int").as("patient_id"),
-        col("event_time"), col("value").cast("double").as("value"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[VitalPoint]
-      .groupByKey(_.patient_id)
-      .transformWithState(
-        new HealthStateProcessor(windowMs, minTraining, confidencePercentage,
-          alertThreshold, originMs),
-        TimeMode.EventTime(), OutputMode.Append(), Encoders.product[HealthScore])
-  }
+      originMs: Long = Health.OriginMs): Dataset[HealthScore] =
+    run(events, watermarkDelay,
+      new HealthStateProcessor(windowMs, minTraining, confidencePercentage,
+        alertThreshold, originMs))
 
   /** [[score]] with the ARIMA-family model swapped in: AR(1) residual
     * anomaly + AR(1) 1-step forecast alerting ([[Ar1HealthStateProcessor]]),
@@ -57,20 +47,10 @@ object StreamingHealth {
   def scoreAr1(events: DataFrame, watermarkDelay: String,
       windowMs: Long = DefaultWindowMs, minTraining: Int = 30,
       confidencePercentage: Double = 95.0, alertThreshold: Double = 40.0,
-      originMs: Long = Health.OriginMs): Dataset[HealthScore] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("patient_id").cast("int").as("patient_id"),
-        col("event_time"), col("value").cast("double").as("value"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[VitalPoint]
-      .groupByKey(_.patient_id)
-      .transformWithState(
-        new Ar1HealthStateProcessor(windowMs, minTraining, confidencePercentage,
-          alertThreshold, originMs),
-        TimeMode.EventTime(), OutputMode.Append(), Encoders.product[HealthScore])
-  }
+      originMs: Long = Health.OriginMs): Dataset[HealthScore] =
+    run(events, watermarkDelay,
+      new Ar1HealthStateProcessor(windowMs, minTraining, confidencePercentage,
+        alertThreshold, originMs))
 
   /** [[score]] with ETS(A,A) Holt trend scoring
     * ([[HoltHealthStateProcessor]]): the 1-step forecast level + trend
@@ -79,20 +59,10 @@ object StreamingHealth {
   def scoreHolt(events: DataFrame, watermarkDelay: String,
       windowMs: Long = DefaultWindowMs, minTraining: Int = 30,
       alertThreshold: Double = 40.0, originMs: Long = Health.OriginMs,
-      alpha: Double = 0.3, gamma: Double = 0.1): Dataset[HealthScore] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("patient_id").cast("int").as("patient_id"),
-        col("event_time"), col("value").cast("double").as("value"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[VitalPoint]
-      .groupByKey(_.patient_id)
-      .transformWithState(
-        new HoltHealthStateProcessor(windowMs, minTraining, 95.0,
-          alertThreshold, originMs, alpha, gamma),
-        TimeMode.EventTime(), OutputMode.Append(), Encoders.product[HealthScore])
-  }
+      alpha: Double = 0.3, gamma: Double = 0.1): Dataset[HealthScore] =
+    run(events, watermarkDelay,
+      new HoltHealthStateProcessor(windowMs, minTraining, 95.0,
+        alertThreshold, originMs, alpha, gamma))
 
   /** [[score]] with Page–Hinkley drift detection
     * ([[PhHealthStateProcessor]]): flags a sustained mean shift online
@@ -100,20 +70,10 @@ object StreamingHealth {
   def scorePh(events: DataFrame, watermarkDelay: String,
       windowMs: Long = DefaultWindowMs, minTraining: Int = 30,
       alertThreshold: Double = 40.0, originMs: Long = Health.OriginMs,
-      delta: Double = 0.5, lambda: Double = 15.0): Dataset[HealthScore] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("patient_id").cast("int").as("patient_id"),
-        col("event_time"), col("value").cast("double").as("value"))
-      .withWatermark("event_time", watermarkDelay)
-      .as[VitalPoint]
-      .groupByKey(_.patient_id)
-      .transformWithState(
-        new PhHealthStateProcessor(windowMs, minTraining, 95.0,
-          alertThreshold, originMs, delta, lambda),
-        TimeMode.EventTime(), OutputMode.Append(), Encoders.product[HealthScore])
-  }
+      delta: Double = 0.5, lambda: Double = 15.0): Dataset[HealthScore] =
+    run(events, watermarkDelay,
+      new PhHealthStateProcessor(windowMs, minTraining, 95.0,
+        alertThreshold, originMs, delta, lambda))
 
   /** Rolling-conformal scoring: distribution-free ±q̂ anomaly
     * intervals from the last 64 window-to-window moves (see
@@ -121,7 +81,15 @@ object StreamingHealth {
   def scoreConformal(events: DataFrame, watermarkDelay: String,
       windowMs: Long = DefaultWindowMs, minTraining: Int = 30,
       alertThreshold: Double = 40.0, originMs: Long = Health.OriginMs)
-      : Dataset[HealthScore] = {
+      : Dataset[HealthScore] =
+    run(events, watermarkDelay,
+      new ConformalHealthStateProcessor(windowMs, minTraining, 95.0,
+        alertThreshold, originMs))
+
+  /** The shared body of the `score*` variants: project and type the
+    * input, set the watermark, key by patient and run `processor`. */
+  private def run(events: DataFrame, watermarkDelay: String,
+      processor: HealthStateProcessor): Dataset[HealthScore] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -130,10 +98,8 @@ object StreamingHealth {
       .withWatermark("event_time", watermarkDelay)
       .as[VitalPoint]
       .groupByKey(_.patient_id)
-      .transformWithState(
-        new ConformalHealthStateProcessor(windowMs, minTraining, 95.0,
-          alertThreshold, originMs),
-        TimeMode.EventTime(), OutputMode.Append(), Encoders.product[HealthScore])
+      .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append(),
+        Encoders.product[HealthScore])
   }
 
   /** Statement [4]'s final filter: the `heartbeat_alerts` stream

@@ -77,11 +77,15 @@ object StreamingSetJoin {
   /** The index's LIVE bucket count: the `_BUCKETS` manifest at the
     * index root, or [[Buckets]] for a fresh (or pre-manifest) index.
     * Every append and probe derives its `pmod` from this, so a
-    * compaction-time rescale stays consistent with both. */
+    * compaction-time rescale stays consistent with both. Heals a
+    * half-done compaction swap first: otherwise a crash right after a
+    * rescale would read the fresh default here and probe or append
+    * under the wrong modulus. */
   def bucketCount(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(dir, "_BUCKETS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recover(fs, dir)
     if (fs.exists(p)) {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in).mkString.trim.toInt
@@ -146,7 +150,9 @@ object StreamingSetJoin {
       dir, "sb", "doc_id")
 
   /** Append rows bucketed by `pmod(keyCol, live bucket count)`, and pin
-    * that count in the manifest so later appends/probes/rescales agree. */
+    * that count in the manifest so later appends/probes/rescales agree.
+    * [[bucketCount]] runs first, so a half-done compaction swap is
+    * healed before anything is written to `dir`. */
   private[streaming] def appendBucketed(rows: DataFrame, dir: String,
       bucketCol: String, keyCol: String): Unit = {
     val spark = rows.sparkSession

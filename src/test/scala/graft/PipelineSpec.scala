@@ -59,6 +59,32 @@ class PipelineSpec extends SparkSpec {
     assert(kept + dropped == flagged.count())
   }
 
+  test("forecast [4] is total when a key's first values are equal") {
+    // a zero-variance prefix once made r = corr(value, x) divide by zero
+    val ys = Seq(10.37, 10.37, 11.0, 12.5)
+    val df = ys.zipWithIndex.map { case (v, i) =>
+      (16, i + 1L, new java.sql.Timestamp(ops.Health.OriginMs + (i + 1) * 3600000L), v)
+    }.toDF("user_id", "event_id", "ts", "value")
+    val got = ops.Health.forecast(df, "user_id", "ts", "value", "event_id", minTraining = 3)
+      .orderBy("event_id").select("forecast_value", "rmse").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
+        Option(r.get(1)).map(_.asInstanceOf[Double])))
+    assert(got.take(2).forall(_ == (None, None)), "no forecast before 3 points")
+    // cumulative OLS by hand: x in days, horizon one mean step
+    (3 to 4).foreach { n =>
+      val x = (1 to n).map(_ / 24.0); val y = ys.take(n)
+      val (mx, my) = (x.sum / n, y.sum / n)
+      val sxy = x.zip(y).map { case (a, b) => (a - mx) * (b - my) }.sum
+      val sxx = x.map(a => (a - mx) * (a - mx)).sum
+      val syy = y.map(b => (b - my) * (b - my)).sum
+      val fc = my + sxy / sxx * (x.last + (x.last - x.head) / (n - 1) - mx)
+      val rmse = math.sqrt((syy - sxy * sxy / sxx) / n)
+      val (gf, gr) = got(n - 1)
+      assert(math.abs(gf.get - fc) < 1e-9 && math.abs(gr.get - rmse) < 1e-9,
+        s"row $n: got ($gf, $gr), want ($fc, $rmse)")
+    }
+  }
+
   test("Confluent Avro wire format round-trips the nested event exactly") {
     val sample = events.take(500)
     sample.foreach { e =>

@@ -138,6 +138,49 @@ class IndexPruningSpec extends SparkSpec {
     assert(probed.count() == expected)
   }
 
+  test("a crash after a rescale: the next batch probes and appends under the rescaled count") {
+    import spark.implicits._
+    val dir = tmp("prune_rescale_crash") + "/idx"
+    val pref = (0L until 20000L).map(i => (i * 2654435761L % 1000000L, i, 40L))
+      .toDF("sh", "doc_id", "n")
+    StreamingSetJoin.primePostings(pref, dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a per-bucket target of bytes/64 rescales this corpus to 64 buckets
+    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(dir)).getLength
+    spark.conf.set("spark.graft.stream.bucketTargetBytes", ((bytes + 63) / 64).toString)
+    try StreamingSetJoin.compact(spark, dir, "pb", keyCol = Some("sh"))
+    finally spark.conf.unset("spark.graft.stream.bucketTargetBytes")
+    assert(StreamingSetJoin.bucketCount(spark, dir) == 64, "fixture must rescale to 64")
+    // the next compaction crashes between its renames: the rescaled
+    // index (and its manifest) sits at _old, the live dir is missing
+    def crash(): Unit = {
+      fs.rename(new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(dir + "_old"))
+      fs.mkdirs(new org.apache.hadoop.fs.Path(dir + "_compacting"))
+    }
+    crash()
+    // the next batch derives its probe buckets exactly as `start` does
+    val probeSh = pref.select(col("sh")).as[Long].take(200).toSeq
+    val nb = StreamingSetJoin.bucketCount(spark, dir)
+    assert(nb == 64, s"probe must use the rescaled count, got $nb")
+    val pb = probeSh.map(sh => java.lang.Math.floorMod(sh, nb.toLong)).distinct
+    val hits = StreamingSetJoin.probeIndex(spark, dir, "pb", pb,
+        "sh BIGINT, doc_id BIGINT, n BIGINT, pb INT")
+      .filter(col("sh").isin(probeSh: _*)).count()
+    assert(hits == pref.filter(col("sh").isin(probeSh: _*)).count(),
+      "the probe must miss no candidate")
+    // an append straight out of the crash state lands beside the old
+    // index under the rescaled count, not in a fresh 32-bucket layout
+    crash()
+    val more = (20000L until 20500L).map(i => (i * 2654435761L % 1000000L, i, 40L))
+      .toDF("sh", "doc_id", "n")
+    StreamingSetJoin.primePostings(more, dir)
+    val after = spark.read.parquet(dir)
+    assert(after.count() == 20500L, "the append must not hide the old index")
+    assert(after.filter(col("pb") =!= pmod(col("sh"), lit(64L))).count() == 0,
+      "every row must sit in its pmod(sh, 64) bucket")
+  }
+
   test("ANN index read prunes to the probed cells") {
     import spark.implicits._
     val dir = tmp("prune_ann") + "/idx"

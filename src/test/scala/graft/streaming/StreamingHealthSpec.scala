@@ -168,6 +168,43 @@ class StreamingHealthSpec extends SparkSpec {
       s"got ${rows.toSeq}")
   }
 
+  test("a row between the two watermarks is folded into its window, not dropped") {
+    // Spark filters late rows with the PREVIOUS batch's watermark but
+    // hands the processor the current one: in the 4th batch below the
+    // filter uses 8.5 s while the processor sees 18 s, so the 9.2 s row
+    // reaches a window that ended before the processor's watermark
+    import spark.implicits._
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    val mem = MemoryStream[VitalPoint](Encoders.product[VitalPoint], spark)
+    val scored = StreamingHealth.score(mem.toDF(), watermarkDelay = "2 seconds",
+      windowMs = 1000L, minTraining = 999, alertThreshold = 0.0,
+      originMs = sim.originMs)
+    val ckpt = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "ckpt").toString
+    val q = try scored.toDF().writeStream.format("memory").queryName("between")
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    finally prev.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    def at(ms: Long) = VitalPoint(7, new java.sql.Timestamp(sim.originMs + ms), 1.0)
+    val dropped = try {
+      Seq(10000L, 10500L, 20000L, 9200L).foreach { ms =>
+        mem.addData(at(ms)); q.processAllAvailable()
+      }
+      (1 to 2).foreach { i =>
+        mem.addData(VitalPoint(999,
+          new java.sql.Timestamp(sim.originMs + 10_000_000L + i), 0.0))
+        q.processAllAvailable()
+      }
+      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    } finally q.stop()
+    val rows = spark.table("between").filter(col("patient_id") === 7)
+      .select("window_start_ms", "n_events").collect()
+      .map(r => (r.getLong(0) - sim.originMs, r.getLong(1))).sortBy(_._1).toSeq
+    assert(rows.contains((9000L, 1L)), s"the 9.2 s row vanished: $rows")
+    assert(rows.map(_._2).sum + dropped == 4, s"windows $rows, $dropped dropped")
+  }
+
   test("out-of-order arrival within the watermark is folded correctly") {
     import spark.implicits._
     val mem = MemoryStream[VitalPoint](Encoders.product[VitalPoint], spark)
