@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Num, Query, Tables}
+import graft.functions.BackboneGraph
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on relational data: PageRank over the
@@ -22,8 +23,10 @@ object Graph {
 
   /** The supplier co-purchase backbone: top-5000 strongest (>= 3
     * shared orders) edges, (u < v), deterministic tie-break — shared
-    * by q119 (triangles) and q126 (k-core). See q119's scaladoc for
-    * why the bounded backbone is the scale decision. */
+    * by every backbone query. See q119's scaladoc for why the bounded
+    * backbone is the scale decision. Lazy: the iterative queries read
+    * it once, into [[BackboneGraph]]; a caller that reads it more than
+    * once checkpoints it where it calls it. */
   private def backbone(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     // round 9 NEGATIVE RESULT, kept as the r8 shape on purpose: a
@@ -55,7 +58,6 @@ object Graph {
       .filter(col("n_orders") >= 3)
       .orderBy(col("n_orders").desc, col("u"), col("v")).limit(5000)
       .select(col("u"), col("v"))
-      .localCheckpoint()
   }
 
   /** DuckDB twin of [[backbone]], ending in `e0(u, v)`. */
@@ -83,51 +85,10 @@ object Graph {
             JOIN r${i - 1} r ON r.node = e.src
             GROUP BY e.dst) c ON c.dst = d.src)"""
 
-  /** The q176 partition — 4 SYNCHRONOUS label-propagation rounds on
-    * the backbone with the deterministic (count DESC, label ASC)
-    * tie-break, each round lineage-truncated: (node, lbl). Shared by
-    * q176 (the communities themselves) and q218 (their modularity). */
-  private def lpaLabels(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val e0 = backbone(s, d)
-    val edges = e0.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint() // referenced once per round
-    lpaLabelsFrom(edges)
-  }
-
-  /** [[lpaLabels]] on an ALREADY-materialized doubled edge list — lets
-    * q218 share one backbone computation between the partition and the
-    * modularity joins instead of paying the lineitem self-join twice. */
-  private def lpaLabelsFrom(edges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    // round 10 (guide §2.4/§3.1): each round's label frame is consumed
-    // exactly ONCE (by the next round's join), so the per-round
-    // localCheckpoints bought nothing but 4 extra job submissions —
-    // all 4 rounds now build ONE lazy plan, checkpointed once at the
-    // end (callers reference the result twice). The ≤2·5000-row
-    // checkpointed edge list broadcasts (checkpoint scans carry no
-    // stats, so a stats-blind planner would sort-merge both tiny
-    // sides — the q218/q222 lesson); backbone caps keep that
-    // scale-safe forever.
-    var lab = edges.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    for (_ <- 1 to 4) {
-      lab = broadcast(edges)
-        .join(lab.select(col("node").as("b"), col("lbl")), Seq("b"))
-        .groupBy(col("a").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("node"))
-            .orderBy(col("c").desc, col("lbl"))))
-        .filter(col("rn") === 1)
-        .select(col("node"), col("lbl"))
-    }
-    lab.localCheckpoint()
-  }
-
-  /** DuckDB twin of [[lpaLabels]]: CTE chain ending in `l4(node,
-    * lbl)`, with `e0(u, v)` and the doubled `e(a, b)` also in scope. */
+  /** DuckDB twin of the q176/q218 partition (4 synchronous
+    * label-propagation rounds, (count DESC, label ASC) tie-break): CTE
+    * chain ending in `l4(node, lbl)`, with `e0(u, v)` and the doubled
+    * `e(a, b)` also in scope. */
   private def sqlLpaChain: String = {
     def round(i: Int): String = {
       val p = i - 1
@@ -242,11 +203,10 @@ object Graph {
     Query(
       "q119_triangle_count",
       (s, d) => {
-        // localCheckpoint inside backbone(): the edge list is
-        // referenced three times in the triangle join — without
-        // truncation each reference re-evaluates the co-occurrence
-        // aggregation (q101's lesson)
-        val e = backbone(s, d)
+        // localCheckpoint: the edge list is referenced three times in
+        // the triangle join — without truncation each reference
+        // re-evaluates the co-occurrence aggregation (q101's lesson)
+        val e = backbone(s, d).localCheckpoint()
         // round 10: the ≤5000-row backbone broadcasts into both legs of
         // the wedge/closing joins — the checkpoint scan has no stats,
         // so the planner sort-merged all three legs (2 exchanges + 3
@@ -282,44 +242,29 @@ object Graph {
     // Bounded k-core peeling (k=6, 4 rounds) on the co-purchase
     // backbone: each round drops nodes with degree < k and the edges
     // touching them — the classic community-density filter (4 rounds
-    // is a defined operator, not a fixpoint claim; the iterative shape
-    // matches q101/q84: per-round degree aggregate + edge semi-joins,
-    // localCheckpoint truncating lineage). All-integer, so the
-    // surviving subgraph is bit-identical across engines. Output: the
-    // surviving nodes with their residual degree.
+    // is a defined operator, not a fixpoint claim). All 4 rounds run in
+    // one task over the packed ≤5000-edge list ([[BackboneGraph]]).
+    // All-integer, so the surviving subgraph is bit-identical across
+    // engines. Output: the surviving nodes with their residual degree.
     Query(
       "q126_kcore",
-      (s, d) => {
-        val K = 6
-        var e = backbone(s, d)
-        // round 10 (guide §3.1): the keep set is node-bounded (≤ 2·5000)
-        // — broadcast both semi-joins instead of checkpointing it (the
-        // two identical broadcast subtrees dedupe via exchange reuse),
-        // so each round is ONE job (e's checkpoint; e is referenced 3×
-        // by the next round, so its truncation stays)
-        for (_ <- 1 to 4) {
-          val deg = e.select(col("u").as("node"))
-            .unionByName(e.select(col("v").as("node")))
-            .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-          val keep = deg.filter(col("dg") >= K).select(col("node"))
-          e = e.join(broadcast(keep.withColumnRenamed("node", "u")),
-              Seq("u"), "left_semi")
-            .join(broadcast(keep.withColumnRenamed("node", "v")),
-              Seq("v"), "left_semi")
-            .select(col("u"), col("v"))
-            .localCheckpoint()
-        }
-        e.select(col("u").as("node"))
-          .unionByName(e.select(col("v").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("residual_degree"))
-          .orderBy(col("node"))
-      },
+      (s, d) =>
+        BackboneGraph.run(backbone(s, d), "node", "residual_degree") { (us, vs) =>
+          def degrees(es: Seq[Int]): Map[Long, Long] =
+            es.flatMap(k => Seq(us(k), vs(k))).groupBy(identity)
+              .map { case (node, ends) => node -> ends.size.toLong }
+          var es: Seq[Int] = us.indices
+          for (_ <- 1 to 4) {
+            val deg = degrees(es)
+            es = es.filter(k => deg(us(k)) >= 6 && deg(vs(k)) >= 6)
+          }
+          degrees(es).toSeq
+        }.orderBy(col("node")),
       Some {
         // every e_i is referenced three times by round i+1 (degree
         // count + two membership filters): MATERIALIZED stops DuckDB
         // from inlining the chain into 3^4 re-evaluations of the
-        // co-occurrence aggregate — the oracle-side twin of the
-        // localCheckpoint truncation on the Spark side
+        // co-occurrence aggregate
         def round(i: Int): String = {
           val p = i - 1
           s"""d$i AS MATERIALIZED (SELECT node, COUNT(*) AS dg FROM (
@@ -345,24 +290,20 @@ object Graph {
     // with the deterministic (count DESC, label ASC) tie-break — the
     // near-linear community detector (Raghavan et al. 2007) that
     // complements q84's connectivity-only clusters and q126's density
-    // cores. Each round is one join on the 5000-edge backbone + one
-    // grouped count + one bounded rank window; `localCheckpoint`
-    // truncates the per-round lineage exactly as q101/q126 do, so four
-    // rounds stay four plans. Synchronous update + integer tie-break
-    // makes every round bit-reproducible — no arrival-order
-    // sensitivity, unlike the asynchronous textbook variant.
+    // cores. All four rounds run in one task over the packed
+    // ≤5000-edge backbone ([[BackboneGraph.labelPropagation]]).
+    // Synchronous update + integer tie-break makes every round
+    // bit-reproducible — no arrival-order sensitivity, unlike the
+    // asynchronous textbook variant.
     Query(
       "q176_label_propagation",
-      (s, d) => {
-        val lab = lpaLabels(s, d)
-        val sizes = lab.groupBy(col("lbl"))
-          .agg(count(lit(1)).as("community_size"))
-        lab.join(broadcast(sizes), Seq("lbl"))
-          .select(col("node").as("node_id"),
-            col("lbl").cast("long").as("community"),
-            col("community_size"))
-          .orderBy(col("node_id"))
-      },
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d),
+            "node_id", "community", "community_size") { g =>
+          val lab = BackboneGraph.labelPropagation(g, 4)
+          val size = lab.groupBy(identity).map { case (l, ms) => l -> ms.length.toLong }
+          lab.indices.map(i => (g.ids(i), g.ids(lab(i)), size(lab(i))))
+        }.orderBy(col("node_id")),
       Some(s"""
         WITH $sqlLpaChain,
         sizes AS (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS community_size
@@ -376,45 +317,19 @@ object Graph {
     // Bounded BFS: hop distance (≤ 4) from the backbone's top-degree
     // supplier — the "blast radius" / reachability primitive the other
     // graph ops don't expose (components say WHETHER connected, k-core
-    // says how dense; BFS says HOW FAR). Each round is one join from
-    // the current frontier + one anti-join against the visited set,
-    // lineage truncated per round; the frontier can never exceed the
-    // 5000-edge backbone's node set, so four rounds are four bounded
-    // plans. The seed is the (degree DESC, node ASC) argmax, fetched
-    // like q78's centroid scalar (bounded driver algebra).
+    // says how dense; BFS says HOW FAR). The seed is the (degree
+    // DESC, node ASC) argmax; the four hops run in one task over the
+    // packed ≤5000-edge backbone ([[BackboneGraph.bfs]]), so the
+    // frontier can never exceed the backbone's node set.
     Query(
       "q182_bfs_hops",
-      (s, d) => {
-        val e0 = backbone(s, d)
-        val edges = e0.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint() // referenced once per round
-        val seed = edges.groupBy(col("a").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .orderBy(col("deg").desc, col("node")).limit(1)
-          .select(col("node"), lit(0).as("dist"))
-          .localCheckpoint()
-        // round 10 (guide §3.1): the frontier and visited sets are
-        // node-bounded — broadcast them (checkpoint scans have no
-        // stats; a stats-blind SMJ added two exchange+sort legs per
-        // round), and stop checkpointing `visited`: it is a union of
-        // already-checkpointed frontiers, so re-evaluating it is a
-        // union of in-memory scans (4 fewer jobs per query)
-        var visited = seed
-        var frontier = seed.select(col("node"))
-        for (i <- 1 to 4) {
-          frontier = edges
-            .join(broadcast(frontier.select(col("node").as("a"))), Seq("a"))
-            .select(col("b").as("node")).distinct()
-            .join(broadcast(visited.select(col("node"))), Seq("node"), "left_anti")
-            .localCheckpoint()
-          visited = visited
-            .unionByName(frontier.withColumn("dist", lit(i)))
-        }
-        visited.select(col("node").cast("long").as("node_id"),
-            col("dist").cast("int").as("hops"))
-          .orderBy(col("node_id"))
-      },
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d), "node_id", "hops") { g =>
+          g.topDegree(1).toSeq.flatMap { seed =>
+            val (dist, _) = BackboneGraph.bfs(g, seed, 4)
+            g.ids.indices.filter(dist(_) >= 0).map(i => (g.ids(i), dist(i)))
+          }
+        }.orderBy(col("node_id")),
       Some {
         def round(i: Int): String = {
           val p = i - 1
@@ -527,7 +442,7 @@ object Graph {
     Query(
       "q217_assortativity",
       (s, d) => {
-        val e0 = backbone(s, d)
+        val e0 = backbone(s, d).localCheckpoint() // read by both union legs
         val und = e0.select(col("u").as("a"), col("v").as("b"))
           .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
           .localCheckpoint() // feeds deg AND the endpoint-pair list
@@ -589,43 +504,30 @@ object Graph {
     // as exact integers over the common denominator 4m²:
     // Q = Σ_c (4·m·e_c − d_c²) / 4m², every term int64 (m ≤ 5000,
     // d_c ≤ 2m ⇒ d_c² ≤ 10^8), so the single final division is the
-    // only double — bit-equal across engines. One bounded join pass
-    // over the backbone; the partition reuses [[lpaLabels]].
+    // only double — bit-equal across engines. The partition (q176's
+    // rounds) and the integer sums run in one task over the packed
+    // backbone; an empty backbone keeps the relational form's one row
+    // of (NULL, 0, NULL).
     Query(
       "q218_modularity",
-      (s, d) => {
-        val e0 = backbone(s, d)
-        val und = e0.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint() // shared: degree pass + all 4 LPA rounds
-        val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-        // lab is backbone-bounded (≤ 5000 nodes) but checkpointed, so
-        // the optimizer has no stats — broadcast it explicitly or both
-        // modularity joins fall back to sort-merge
-        val lab = lpaLabelsFrom(und)
-        val dsum = deg.join(broadcast(lab), Seq("node"))
-          .groupBy(col("lbl")).agg(sum(col("deg")).as("d_c"))
-        val ew = e0
-          .join(broadcast(lab.select(col("node").as("u"), col("lbl").as("lu"))),
-            Seq("u"))
-          .join(broadcast(lab.select(col("node").as("v"), col("lbl").as("lv"))),
-            Seq("v"))
-          .filter(col("lu") === col("lv"))
-          .groupBy(col("lu").as("lbl")).agg(count(lit(1)).as("e_c"))
-        val mrow = e0.agg(count(lit(1)).as("m"))
-        // both sides are community-grid-bounded; broadcast the within-
-        // edge counts so the final assembly is broadcast-only
-        dsum.join(broadcast(ew), Seq("lbl"), "left")
-          .na.fill(0L, Seq("e_c"))
-          .crossJoin(broadcast(mrow))
-          .agg(max(col("m")).as("m"),
-            count(lit(1)).as("n_communities"),
-            sum(lit(4) * col("m") * col("e_c") - col("d_c") * col("d_c"))
-              .as("num"))
-          .select(col("m"), col("n_communities"),
-            graft.Num.r6(col("num").cast("double")
-              / (lit(4.0) * col("m") * col("m"))).as("modularity"))
-      },
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d), "m", "n_communities", "num") { g =>
+          val lab = BackboneGraph.labelPropagation(g, 4)
+          val dc = new Array[Long](g.n) // per label: degree sum, within-edge ends
+          val ec = new Array[Long](g.n)
+          for (i <- 0 until g.n) {
+            dc(lab(i)) += g.deg(i)
+            for (k <- g.off(i) until g.off(i + 1) if lab(g.nbr(k)) == lab(i))
+              ec(lab(i)) += 1
+          }
+          val m = g.nbr.length / 2L
+          val labels = lab.distinct
+          val num = labels.map(c => 4L * m * (ec(c) / 2) - dc(c) * dc(c)).sum
+          if (g.n == 0) Seq((Option.empty[Long], 0L, Option.empty[Long]))
+          else Seq((Some(m), labels.length.toLong, Some(num)))
+        }.select(col("m"), col("n_communities"),
+          graft.Num.r6(col("num").cast("double")
+            / (lit(4.0) * col("m") * col("m"))).as("modularity")),
       Some(s"""
         WITH $sqlLpaChain,
         deg AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS deg
@@ -651,56 +553,24 @@ object Graph {
     // most of the graph, fastest. Degree counts direct partners,
     // PageRank counts endorsement mass; harmonic counts proximity,
     // the metric the others miss. Truncation makes it a bounded
-    // multi-source BFS (20 seeds × the 5000-edge backbone's node
-    // set), each round one frontier join + one (seed, node) anti-join,
-    // lineage-truncated per round exactly like q182. The 1/d weights
-    // for d ∈ {1,2,3} are integer micro-literals (1e6, 5e5, 333333),
-    // so the sum is exact int64 and the one division is bit-equal.
+    // multi-source BFS (20 seeds × the 5000-edge backbone's node set),
+    // run in one task like q182's. The 1/d weights for d ∈ {1,2,3} are
+    // integer micro-literals (1e6, 5e5, 333333), so the sum is exact
+    // int64 and the one division is bit-equal.
     Query(
       "q222_harmonic_centrality",
-      (s, d) => {
-        val e0 = backbone(s, d)
-        val edges = e0.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint() // referenced once per round + degree pass
-        val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-        val seeds = deg.orderBy(col("deg").desc, col("node")).limit(20)
-          .select(col("node").as("seed"), col("deg"))
-          .localCheckpoint() // bounded 20 rows
-        // round 10: broadcast the (seed × node)-bounded visited side of
-        // the anti-join (was a stats-blind SMJ), and stop checkpointing
-        // `visited` — a union of already-checkpointed frontiers (3
-        // fewer jobs per query)
-        var visited = seeds
-          .select(col("seed"), col("seed").as("node"), lit(0).as("dist"))
-          .localCheckpoint()
-        var frontier = visited.select(col("seed"), col("node"))
-        for (i <- 1 to 3) {
-          // edges is the checkpointed ≤10k-row doubled backbone: without
-          // stats the frontier join would sort-merge — broadcast it
-          frontier = frontier.select(col("seed"), col("node").as("a"))
-            .join(broadcast(edges), Seq("a"))
-            .select(col("seed"), col("b").as("node")).distinct()
-            .join(broadcast(visited.select(col("seed"), col("node"))),
-              Seq("seed", "node"), "left_anti")
-            .localCheckpoint()
-          visited = visited
-            .unionByName(frontier.withColumn("dist", lit(i)))
-        }
-        val reach = visited.filter(col("dist") > 0)
-          .groupBy(col("seed"))
-          .agg(sum(when(col("dist") === 1, 1L).otherwise(0L)).as("n1"),
-            sum(when(col("dist") === 2, 1L).otherwise(0L)).as("n2"),
-            sum(when(col("dist") === 3, 1L).otherwise(0L)).as("n3"),
-            sum(when(col("dist") === 1, 1000000L)
-              .when(col("dist") === 2, 500000L)
-              .otherwise(333333L)).as("hq"))
-        seeds.join(broadcast(reach), Seq("seed"), "left") // both ≤ 20 rows
-          .na.fill(0L, Seq("n1", "n2", "n3", "hq"))
-          .select(col("seed"), col("deg"), col("n1"), col("n2"), col("n3"),
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d),
+            "seed", "deg", "n1", "n2", "n3", "hq") { g =>
+          g.topDegree(20).toSeq.map { seed =>
+            val (dist, _) = BackboneGraph.bfs(g, seed, 3)
+            val n = (1 to 3).map(h => dist.count(_ == h).toLong)
+            (g.ids(seed), g.deg(seed).toLong, n(0), n(1), n(2),
+              n(0) * 1000000L + n(1) * 500000L + n(2) * 333333L)
+          }
+        }.select(col("seed"), col("deg"), col("n1"), col("n2"), col("n3"),
             graft.Num.r6(col("hq").cast("double") / lit(1e6)).as("harmonic"))
-          .orderBy(col("seed"))
-      },
+          .orderBy(col("seed")),
       Some {
         def round(i: Int): String = {
           val p = i - 1
@@ -754,7 +624,7 @@ object Graph {
     Query(
       "q238_local_clustering",
       (s, d) => {
-        val e = backbone(s, d)
+        val e = backbone(s, d).localCheckpoint() // read by 5 plan legs
         val und = e.select(col("u").as("a"), col("v").as("b"))
           .unionByName(e.select(col("v").as("a"), col("u").as("b")))
         val deg = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("degree"))
@@ -814,7 +684,8 @@ object Graph {
     // every score is an exact int64 at every step and both engines
     // iterate bit-identically. Edges are the top-5000 strongest
     // (supplier, part) pairs — the same boundedness decision as the
-    // co-purchase backbone, making each half-step a k-bounded join.
+    // co-purchase backbone, so both iterations run in one task over
+    // the packed edge list ([[BackboneGraph.run]]).
     Query(
       "q239_hits",
       (s, d) => {
@@ -823,32 +694,31 @@ object Graph {
           .agg(count(lit(1)).as("n_lines"))
           .filter(col("n_lines") >= 2)
           .orderBy(col("n_lines").desc, col("sk"), col("pk")).limit(5000)
-          .select(col("sk"), col("pk"))
-          .localCheckpoint() // bounded edge list, referenced 4x
-        var hub = ed.select(col("sk")).distinct()
-          .withColumn("h", lit(1000000L))
-        var auth: org.apache.spark.sql.DataFrame = null
-        for (_ <- 1 to 2) {
-          val araw = ed.join(broadcast(hub), Seq("sk"))
-            .groupBy(col("pk")).agg(sum(col("h")).as("araw"))
-          val asum = araw.agg(sum(col("araw")).as("s"))
-          auth = araw.crossJoin(broadcast(asum))
-            .select(col("pk"), expr("(araw * 1000000) div s").as("a"))
-            .localCheckpoint() // truncate: next half-step re-reads it
-          val hraw = ed.join(broadcast(auth), Seq("pk"))
-            .groupBy(col("sk")).agg(sum(col("a")).as("hraw"))
-          val hsum = hraw.agg(sum(col("hraw")).as("s"))
-          hub = hraw.crossJoin(broadcast(hsum))
-            .select(col("sk"), expr("(hraw * 1000000) div s").as("h"))
-            .localCheckpoint()
-        }
-        val topH = hub.orderBy(col("h").desc, col("sk")).limit(10)
-          .select(lit("hub").as("role"), col("sk").as("id"),
-            graft.Num.r6(col("h").cast("double") / lit(1e6)).as("score"))
-        val topA = auth.orderBy(col("a").desc, col("pk")).limit(10)
-          .select(lit("authority").as("role"), col("pk").as("id"),
-            graft.Num.r6(col("a").cast("double") / lit(1e6)).as("score"))
-        topH.unionByName(topA).orderBy(col("role"), col("score").desc, col("id"))
+          .select(col("sk").as("u"), col("pk").as("v"))
+        BackboneGraph.run(ed, "role", "id", "q") { (sk, pk) =>
+          val hubs = sk.distinct.sorted
+          val auths = pk.distinct.sorted
+          val hi = sk.map(java.util.Arrays.binarySearch(hubs, _))
+          val ai = pk.map(java.util.Arrays.binarySearch(auths, _))
+          // one half-step: raw sums along the edges, then (raw·1e6) div Σraw
+          def half(from: Array[Long], src: Array[Int], dst: Array[Int], n: Int) = {
+            val raw = new Array[Long](n)
+            for (k <- src.indices) raw(dst(k)) += from(src(k))
+            val tot = raw.sum
+            raw.map(r => r * 1000000L / tot)
+          }
+          var h = Array.fill(hubs.length)(1000000L)
+          var a = Array.empty[Long]
+          for (_ <- 1 to 2) {
+            a = half(h, hi, ai, auths.length)
+            h = half(a, ai, hi, hubs.length)
+          }
+          def top(role: String, ids: Array[Long], q: Array[Long]) =
+            ids.indices.sortBy(i => (-q(i), ids(i))).take(10).map(i => (role, ids(i), q(i)))
+          top("hub", hubs, h) ++ top("authority", auths, a)
+        }.select(col("role"), col("id"),
+            graft.Num.r6(col("q").cast("double") / lit(1e6)).as("score"))
+          .orderBy(col("role"), col("score").desc, col("id"))
       },
       Some {
         def half(i: Int): String =
@@ -895,67 +765,27 @@ object Graph {
     // layer by layer; every per-edge term is computed from exact
     // integers by the identical IEEE formula and micro-quantized
     // BEFORE the per-node sum, so accumulation order cannot surface.
-    // All frames are (20 seeds × ≤5000-edge backbone)-bounded.
+    // Both passes run per seed in one task over the packed ≤5000-edge
+    // backbone ([[BackboneGraph.bfs]] supplies distances and σ).
     Query(
       "q252_betweenness",
-      (s, d) => {
-        val e0 = backbone(s, d)
-        val edges = e0.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint()
-        val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-        val seeds = deg.orderBy(col("deg").desc, col("node")).limit(20)
-          .select(col("node").as("seed")).localCheckpoint()
-        val l0 = seeds.select(col("seed"), col("seed").as("node"),
-          lit(1L).as("sigma")).localCheckpoint()
-        // round 10: broadcast the bounded visited/anti side (was a
-        // stats-blind SMJ) and drop the visited checkpoints — unions of
-        // already-checkpointed layers (2 fewer jobs)
-        def expand(cur: org.apache.spark.sql.DataFrame,
-            visited: org.apache.spark.sql.DataFrame) = cur
-          .select(col("seed"), col("node").as("a"), col("sigma"))
-          .join(broadcast(edges), Seq("a"))
-          .select(col("seed"), col("b").as("node"), col("sigma"))
-          .join(broadcast(visited.select(col("seed"), col("node"))),
-            Seq("seed", "node"), "left_anti")
-          .groupBy(col("seed"), col("node"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .localCheckpoint()
-        val v0 = l0.select(col("seed"), col("node"))
-        val l1 = expand(l0, v0)
-        val v1 = v0.unionByName(l1.select(col("seed"), col("node")))
-        val l2 = expand(l1, v1)
-        val v2 = v1.unionByName(l2.select(col("seed"), col("node")))
-        val l3 = expand(l2, v2)
-        // backward dependency accumulation over the BFS DAG, δ(L3)=0
-        def accumulate(prev: org.apache.spark.sql.DataFrame,
-            nextWithDelta: org.apache.spark.sql.DataFrame) = prev
-          .select(col("seed"), col("node").as("v"), col("sigma").as("sv"))
-          .join(broadcast(edges), col("v") === col("a"))
-          .join(broadcast(nextWithDelta.select(col("seed"), col("node").as("b"),
-            col("sigma").as("sw"), col("dq"))), Seq("seed", "b"))
-          .withColumn("term", floor(lit(1e6) *
-            (col("sv").cast("double") / col("sw")) *
-            (lit(1.0) + col("dq").cast("double") / lit(1e6)) + lit(0.5))
-            .cast("long"))
-          .groupBy(col("seed"), col("v").as("node"))
-          .agg(sum(col("term")).as("dq"))
-          .localCheckpoint()
-        val d3 = l3.withColumn("dq", lit(0L))
-        val d2raw = accumulate(l2, d3)
-        // layer-2 nodes with no layer-3 successors carry δ=0
-        val d2 = l2.join(broadcast(d2raw), Seq("seed", "node"), "left")
-          .select(col("seed"), col("node"), col("sigma"),
-            coalesce(col("dq"), lit(0L)).as("dq"))
-        val d1 = accumulate(l1, d2)
-        val b = d1.select(col("node"), col("dq"))
-          .unionByName(d2.select(col("node"), col("dq")))
-          .groupBy(col("node")).agg(sum(col("dq")).as("bq"))
-          .filter(col("bq") > 0)
-        b.orderBy(col("bq").desc, col("node")).limit(20)
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d), "node", "bq") { g =>
+          val bq = new Array[Long](g.n)
+          for (seed <- g.topDegree(20)) {
+            val (dist, sigma) = BackboneGraph.bfs(g, seed, 3)
+            val dq = new Array[Long](g.n) // δ(L3) = 0
+            for (layer <- Seq(2, 1); v <- 0 until g.n if dist(v) == layer) {
+              for (k <- g.off(v) until g.off(v + 1); w = g.nbr(k) if dist(w) == layer + 1)
+                dq(v) += math.floor(1e6 * (sigma(v).toDouble / sigma(w).toDouble) *
+                  (1.0 + dq(w).toDouble / 1e6) + 0.5).toLong
+              bq(v) += dq(v)
+            }
+          }
+          g.ids.indices.filter(bq(_) > 0).map(i => (g.ids(i), bq(i)))
+        }.orderBy(col("bq").desc, col("node")).limit(20)
           .select(col("node"), graft.Num.r6(col("bq").cast("double") / lit(1e6))
-            .as("betweenness"))
-      },
+            .as("betweenness")),
       Some {
         def layer(i: Int): String = {
           val p = i - 1
@@ -1023,7 +853,7 @@ object Graph {
     Query(
       "q353_rich_club",
       (s, d) => {
-        val e0 = backbone(s, d)
+        val e0 = backbone(s, d).localCheckpoint() // read by deg and ek
         val deg = e0.select(col("u").as("node"))
           .unionByName(e0.select(col("v").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -1085,7 +915,7 @@ object Graph {
     Query(
       "q354_pref_attachment",
       (s, d) => {
-        val e0 = backbone(s, d)
+        val e0 = backbone(s, d).localCheckpoint() // read by edges and cand
         val edges = e0.select(col("u").as("a"), col("v").as("b"))
           .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
           .localCheckpoint()
@@ -1129,47 +959,23 @@ object Graph {
     // companion to harmonic centrality (q222; harmonic handles
     // disconnection by summing 1/d, closeness by restricting to the
     // reached set and scaling by its share). Same bounded multi-source
-    // BFS: 20 seeds × ≤5000 edges, distances and counts all integer.
+    // BFS as q222, run in one task: 20 seeds × ≤5000 edges, distances
+    // and counts all integer.
     Query(
       "q355_closeness",
-      (s, d) => {
-        val e0 = backbone(s, d)
-        val edges = e0.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e0.select(col("v").as("a"), col("u").as("b")))
-          .localCheckpoint()
-        val deg = edges.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-        val n = deg.agg(count(lit(1)).as("n"))
-        val seeds = deg.orderBy(col("deg").desc, col("node")).limit(20)
-          .select(col("node").as("seed")).localCheckpoint()
-        val l0 = seeds.select(col("seed"), col("seed").as("node"))
-          .localCheckpoint()
-        // round 10: broadcast the bounded visited/anti side (was a
-        // stats-blind SMJ) and drop the visited checkpoints — unions of
-        // already-checkpointed layers (2 fewer jobs)
-        def expand(cur: org.apache.spark.sql.DataFrame,
-            visited: org.apache.spark.sql.DataFrame) = cur
-          .select(col("seed"), col("node").as("a"))
-          .join(broadcast(edges), Seq("a"))
-          .select(col("seed"), col("b").as("node")).distinct()
-          .join(broadcast(visited), Seq("seed", "node"), "left_anti")
-          .localCheckpoint()
-        val l1 = expand(l0, l0)
-        val v1 = l0.unionByName(l1)
-        val l2 = expand(l1, v1)
-        val v2 = v1.unionByName(l2)
-        val l3 = expand(l2, v2)
-        val all = l1.withColumn("dist", lit(1L))
-          .unionByName(l2.withColumn("dist", lit(2L)))
-          .unionByName(l3.withColumn("dist", lit(3L)))
-        all.groupBy(col("seed"))
-          .agg(count(lit(1)).as("r1"), sum(col("dist")).as("sd"))
-          .crossJoin(broadcast(n))
-          .select(col("seed").as("node"), (col("r1") + lit(1)).as("n_reached"),
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d), "node", "r1", "sd", "n") { g =>
+          g.topDegree(20).toSeq.flatMap { seed =>
+            val reached = BackboneGraph.bfs(g, seed, 3)._1.filter(_ > 0)
+            if (reached.isEmpty) None
+            else Some((g.ids(seed), reached.length.toLong,
+              reached.map(_.toLong).sum, g.n.toLong))
+          }
+        }.select(col("node"), (col("r1") + lit(1)).as("n_reached"),
             graft.Num.r6((col("r1").cast("double") / col("sd").cast("double")) *
               (col("r1").cast("double") / (col("n").cast("double") - lit(1.0))))
               .as("closeness"))
-          .orderBy(col("node"))
-      },
+          .orderBy(col("node")),
       Some {
         def layer(i: Int): String = {
           val p = i - 1
@@ -1217,41 +1023,24 @@ object Graph {
     // distance-bounds. All state is exact integers: neighbour sums are
     // int64 (≤ S·maxdeg ≈ 5e12), the renormalization rides
     // DECIMAL(38,0)/HUGEINT x·S // Σx (truncating division, identical
-    // both engines), ties in the final ranking break on node id. Per
-    // round: one join on the 5000-edge backbone + one aggregate,
-    // lineage truncated per iteration — identical plan shape to
-    // q101/q126, k-bounded forever.
+    // both engines; BigInt here), ties in the final ranking break on
+    // node id. All 5 rounds run in one task over the packed ≤5000-edge
+    // backbone ([[BackboneGraph]]), k-bounded forever.
     Query(
       "q384_eigenvector_centrality",
-      (s, d) => {
-        val e = backbone(s, d)
-        val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-          .localCheckpoint()
-        val nodes = sym.select(col("u").as("node")).distinct().localCheckpoint()
-        val nn = nodes.agg(count(lit(1)).as("n"))
-        var x = nodes.crossJoin(broadcast(nn))
-          .select(col("node"), expr(s"$S div n").as("xq"))
-          .localCheckpoint()
-        // round 10: the per-round rank frame and neighbour sums are
-        // node-bounded — broadcast both joins (checkpoint scans carry
-        // no stats; the stats-blind planner sort-merged the ≤10k-row
-        // edge list against the ≤5k-row rank frame every round)
-        for (_ <- 1 to Iters) {
-          val y = sym.join(broadcast(
-              x.select(col("node").as("u"), col("xq").as("xu"))), Seq("u"))
-            .groupBy(col("v").as("node")).agg(sum(col("xu")).as("y"))
-          val ty = y.agg(sum(col("y").cast("decimal(38,0)")).as("ty"))
-          x = nodes.join(broadcast(y), Seq("node"), "left")
-            .crossJoin(broadcast(ty))
-            .select(col("node"),
-              coalesce(expr(s"cast(cast(y as decimal(38,0)) * $S div ty as bigint)"),
-                lit(0L)).as("xq"))
-            .localCheckpoint()
-        }
-        x.orderBy(col("xq").desc, col("node")).limit(20)
-          .select(col("node"), col("xq").as("score_q"),
-            Num.r6(col("xq").cast("double") / lit(S.toDouble)).as("score"))
-      },
+      (s, d) =>
+        BackboneGraph.runCsr(backbone(s, d), "node", "score_q") { g =>
+          var x = Array.fill(g.n)(S / g.n)
+          for (_ <- 1 to Iters) {
+            val y = Array.tabulate(g.n)(v =>
+              (g.off(v) until g.off(v + 1)).map(k => x(g.nbr(k))).sum)
+            val ty = BigInt(y.sum)
+            x = y.map(yv => (BigInt(yv) * S / ty).toLong)
+          }
+          g.ids.toSeq.zip(x)
+        }.orderBy(col("score_q").desc, col("node")).limit(20)
+          .select(col("node"), col("score_q"),
+            Num.r6(col("score_q").cast("double") / lit(S.toDouble)).as("score")),
       Some {
         def round(i: Int): String = {
           val p = i - 1

@@ -19,13 +19,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * duplicate-free inputs the count equals `array_intersect`'s exactly;
   * inputs MUST be sorted ascending or the count is meaningless —
   * callers own that invariant (`sort_array` at set-build time).
+  * A NULL element in either array makes the result NULL; a side whose
+  * type rules nulls out (`containsNull = false`, e.g. `collect_list`
+  * output) skips that scan, so its generated code is the bare merge.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullable: Boolean = left.nullable || right.nullable
+  private def mayHoldNull(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
+
+  override def nullable: Boolean =
+    left.nullable || right.nullable || mayHoldNull(left) || mayHoldNull(right)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(t: DataType) = t match {
@@ -41,6 +50,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    def hasNull(d: ArrayData) = (0 until d.numElements()).exists(d.isNullAt)
+    if ((mayHoldNull(left) && hasNull(x)) || (mayHoldNull(right) && hasNull(y)))
+      return null
     val nx = x.numElements()
     val ny = y.numElements()
     var i = 0
@@ -65,7 +77,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
       val c = ctx.freshName("c")
-      s"""
+      val merge = s"""
          |int $nx = $a.numElements();
          |int $ny = $b.numElements();
          |int $i = 0, $j = 0;
@@ -79,6 +91,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
          |}
          |${ev.value} = $c;
        """.stripMargin
+      val scans = Seq(left -> a, right -> b).collect {
+        case (e, arr) if mayHoldNull(e) => arr
+      }
+      if (scans.isEmpty) merge
+      else {
+        val k = ctx.freshName("k")
+        val anyNull = ctx.freshName("anyNull")
+        val scanCode = scans.map(arr =>
+          s"for (int $k = 0; !$anyNull && $k < $arr.numElements(); $k++) " +
+            s"$anyNull = $arr.isNullAt($k);").mkString("\n")
+        s"""
+           |boolean $anyNull = false;
+           |$scanCode
+           |if ($anyNull) { ${ev.isNull} = true; } else { $merge }
+         """.stripMargin
+      }
     })
 
   override protected def withNewChildrenInternal(newLeft: Expression,

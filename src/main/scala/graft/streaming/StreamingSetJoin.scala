@@ -219,8 +219,12 @@ object StreamingSetJoin {
           val setsB = bucketCount(spark, setsDir)
           val sb = cand.select(pmod(col("old_id"), lit(setsB.toLong)).as("sb"))
             .distinct().as[Long].collect().toSeq
+          // sort_array: sets written before the merge-intersection
+          // kernel (round 10) are unsorted, and an unsorted side makes
+          // the merge undercount without any error
           val oldSets = probeIndex(spark, setsDir, "sb", sb,
             "doc_id BIGINT, shs ARRAY<BIGINT>, n BIGINT, sb INT")
+            .withColumn("shs", sort_array(col("shs")))
           val allSets = oldSets.unionByName(sets)
           val verified = cand
             .join(sets.select(col("doc_id"), col("shs").as("sa")), Seq("doc_id"))
@@ -278,7 +282,11 @@ object StreamingSetJoin {
           math.min(65536, math.max(curB, math.max(Buckets, want)))
         case None => curB
       }
-      val df = spark.read.parquet(dir)
+      // the sets index's rewrite also sorts legacy unsorted `shs`
+      val raw = spark.read.parquet(dir)
+      val df =
+        if (raw.columns.contains("shs")) raw.withColumn("shs", sort_array(col("shs")))
+        else raw
       val rescaled = keyCol match {
         case Some(k) if newB != curB =>
           df.withColumn(bucketCol, pmod(col(k), lit(newB.toLong)))

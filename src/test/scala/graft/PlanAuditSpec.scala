@@ -49,7 +49,8 @@ class PlanAuditSpec extends SparkSpec {
     // below groups by BARE measured values (n_chars); their bound is a
     // data-range judgment no mechanical rule can make without also
     // accepting id histograms (the planted-red class), so they stay
-    // hand-audited — recorded negative result, OPTIMIZATION_r10.md.
+    // hand-audited — a recorded negative result, pinned by the
+    // id-histogram red case in the time-grid test below.
     "q289_cliffs_delta" -> "value histogram ECDF staircase: O(distinct quantized values)",
     "q316_energy_distance" -> "value histogram ECDF staircase: O(distinct quantized values)",
     "q329_cramer_von_mises" -> "value histogram ECDF staircase: O(distinct quantized values)",

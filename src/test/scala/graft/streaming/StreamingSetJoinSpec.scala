@@ -88,4 +88,39 @@ class StreamingSetJoinSpec extends SparkSpec {
     assert(oneShot == perDoc)
     assert(oneShot.contains((1L, 2L, 4L)))
   }
+
+  test("legacy unsorted set rows are sorted at probe time and by compaction") {
+    import spark.implicits._
+    // the layout written before sets were stored sorted: doc 1 primed
+    // with its shingle hashes in DESCENDING order
+    def primeLegacy(postingsDir: String, setsDir: String): Unit = {
+      val hashed = StreamingSetJoin.hashedShingles(
+        Seq(SetDoc(1L, "t1 t2 t3 t4 t5 t6 t7")).toDF())
+      StreamingSetJoin.primePostings(StreamingSetJoin.prefixes(hashed), postingsDir)
+      StreamingSetJoin.primeSets(hashed.groupBy(col("doc_id"))
+        .agg(reverse(sort_array(collect_list(col("sh")))).as("shs"),
+          count(lit(1)).as("n")), setsDir)
+    }
+    val postingsDir = tmp("sj_legacy_post") + "/idx"
+    val setsDir = tmp("sj_legacy_sets") + "/idx"
+    val verdictDir = tmp("sj_legacy_verd")
+    primeLegacy(postingsDir, setsDir)
+    val mem = MemoryStream[SetDoc](Encoders.product[SetDoc], spark)
+    val q = StreamingSetJoin.start(mem.toDF(), postingsDir, setsDir,
+      verdictDir, tmp("sj_legacy_ckpt"))
+    try { mem.addData(Seq(SetDoc(2L, "t1 t2 t3 t4 t5 t6 t8"))); q.processAllAvailable() }
+    finally q.stop()
+    // 4 of the two docs' 5 trigrams are shared: J = 4/6 passes 3/5
+    val got = spark.read.parquet(verdictDir).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("old_id"), r.getAs[Long]("n_inter")))
+    assert(got.toSeq == Seq((2L, 1L, 4L)))
+
+    val compactDir = tmp("sj_legacy_compact") + "/idx"
+    primeLegacy(tmp("sj_legacy_post2") + "/idx", compactDir)
+    StreamingSetJoin.compact(spark, compactDir, "sb", keyCol = Some("doc_id"))
+    val shs = spark.read.parquet(compactDir).select(col("shs")).collect()
+      .map(_.getSeq[Long](0))
+    assert(shs.length == 1 && shs.head.length == 5)
+    assert(shs.head == shs.head.sorted, s"compaction must sort legacy sets: ${shs.head}")
+  }
 }
