@@ -43,20 +43,9 @@ object Bench {
     // machine makes pass 1 slow
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
     def remainingS: Double = budgetS - elapsedS
-    Quiet.install()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same timezone as Verify: after the NTZ→Timestamp cast in
-      // Tables.events, a non-UTC wall clock would bench different plans
-      // than the ones Verify checks
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.install() // again: setLogLevel resets the root config
+    // the same session config as Verify, so Bench times the plans Verify checks
+    val spark = Session()
     // run the FULL plan (sorts, projections and all) into the no-op
     // sink — a count() would let the optimizer strip the final orderBy
     // and prune columns, timing a cheaper plan than Verify executes.

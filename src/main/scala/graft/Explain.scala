@@ -1,21 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan auditor: prints the formatted physical plan for the named
-  * queries (or a summary line for all) so shuffle counts, pushed
-  * filters, scan schemas and broadcast choices can be reviewed. */
+/** Plan auditor: prints the formatted physical plan and the
+  * `PlanAudit.violations` for the named queries (or a summary line for
+  * all) so shuffle counts, pushed filters, scan schemas, broadcast
+  * choices and the boundedness prover's verdict can be reviewed. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     val wanted = args.toSet
+    val unknown = wanted -- Registry.all.map(_.name)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
     Registry.all.filter(q => wanted.isEmpty || wanted(q.name)).foreach { q =>
       val df = q.run(spark, sfDir)
       val plan = df.queryExecution.executedPlan
@@ -23,6 +18,7 @@ object Explain {
         println(s"==== ${q.name} ====")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
+        println(s"==== ${q.name} violations: ${PlanAudit.violations(df)}")
       } else {
         val s = plan.toString()
         def n(pat: String) = pat.r.findAllIn(s).size

@@ -6,13 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extensions: native SQL functions for the engine's custom
-  * Catalyst expressions. Install at session build time —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
+  * Catalyst expressions. Install at session build time, with
+  * `.withExtensions(new GraftExtensions)` on the session builder or
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   *
   * [[GraftExtensions.install]] registers the same functions on an
   * already-running session (useful in shells and tests).

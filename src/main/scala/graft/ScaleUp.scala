@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds a key-consistent 10× copy of an sf directory (sf0.1 → ~sf1:
@@ -17,13 +17,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("data/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     def replicate(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until copies).map(i => shift(df, i)).reduce(_.unionByName(_))

@@ -3,19 +3,30 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Skew-resilience evidence: rebuilds the sf0.1 lineitem with a
-  * Zipf-skewed join key (bounded-Pareto inverse CDF over md5 uniforms,
-  * deterministic — the hottest orderkey absorbs ~13% of all rows at
-  * s=1.2), then times the q107 salted-join pipeline on the SKEWED copy
-  * against the same pipeline on the driver's uniform data. The claim
-  * under test: the salt spreads the hot key over SALT reducers, so
-  * skewed wall-clock stays within 2× of uniform at the same row count —
-  * the property that keeps a 1000-executor join from serializing on one
-  * straggler reducer when one user/orderkey goes viral.
+/** Skew-resilience evidence, in two parts that share one session:
   *
-  * Prints one JSON line:
+  * 1. Hash join. Rebuilds the sf0.1 lineitem with a Zipf-skewed join key
+  *    (bounded-Pareto inverse CDF over md5 uniforms, deterministic — the
+  *    hottest orderkey absorbs ~13% of all rows at s=1.2), then times the
+  *    q107 salted-join pipeline on the SKEWED copy against the same
+  *    pipeline on the driver's uniform data. The claim under test: the
+  *    salt spreads the hot key over SALT reducers, so skewed wall-clock
+  *    stays within 2× of uniform at the same row count — the property
+  *    that keeps a 1000-executor join from serializing on one straggler
+  *    reducer when one user/orderkey goes viral.
+  * 2. Native as-of join. Plants a hot key in the events table (every
+  *    even event_id reassigned to one user, so one key carries ~half of
+  *    all probes AND ~half of all quotes — the one-viral-instrument
+  *    tick-data shape), then times the plain `plans.AsOfJoin` against
+  *    `joinSalted` (salt 8, only the hot key salted). The plain join's
+  *    hot key sorts+merges in ONE task; the salted variant spreads it 8
+  *    ways at the cost of replicating only the hot key's quotes.
+  *
+  * Result equality is asserted before any timing in both parts. Prints
+  * two JSON lines:
   * {"metric":"skew_ratio","value":R,"skewed_salted":s,"uniform_salted":u,
   *  "skewed_plain":p,"max_key_share":m,"sf":...}
+  * {"metric":"asof_skew_ratio","value":salted/plain,...}
   */
 object SkewBench {
 
@@ -87,22 +98,30 @@ object SkewBench {
       .agg(count(lit(1)).as("n_items"),
         sum(col("rev")).cast("double").as("revenue"))
 
+  private def time(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+  private def best2(df: => DataFrame): Double = { time(df); math.min(time(df), time(df)) }
+  private def s3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val out = args.lift(1).getOrElse("target/skewdata")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the explicit salt is the portable plan; AQE's skew split would
-      // ALSO fix the plain join, which is exactly what we don't want to
-      // measure here
-      .config("spark.sql.adaptive.skewJoin.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    // the explicit salt is the portable plan; AQE's skew split would ALSO
+    // fix the plain hash join, which is exactly what we don't want to
+    // measure here (it only splits exchanges feeding its known joins, not
+    // the as-of exec, but stays off there too so that comparison is pure)
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+    println(joinSkew(spark, sfDir, out))
+    println(asOfSkew(spark, sfDir))
+    spark.stop()
+  }
 
+  private def joinSkew(spark: SparkSession, sfDir: String, out: String): String = {
     val orders = Tables.orders(spark, sfDir)
     val nOrders = orders.count()
     // deterministic uniform in [0,1) per lineitem row -> Zipf rank ->
@@ -126,13 +145,6 @@ object SkewBench {
     val share = skewedFact.groupBy(col("l_orderkey")).count()
       .agg(max(col("count")).cast("double") / sum(col("count"))).head().getDouble(0)
 
-    def time(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def best2(df: => DataFrame): Double = { time(df); math.min(time(df), time(df)) }
-
     // hot = more than 4x the mean rows/partition, the q127-report cut
     val nFact = skewedFact.count()
     val hotThreshold = 4L * nFact / 32L
@@ -152,11 +164,52 @@ object SkewBench {
     val skewSelective = best2(selectiveSaltedJoin(spark, skewedFact, orders, 8, hotThreshold))
     val uniSelective = best2(selectiveSaltedJoin(spark, uniformFact, orders, 8, hotThreshold))
     val skewPlain = best2(plainJoin(skewedFact, orders))
-    def s3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    println(s"""{"metric":"skew_ratio","value":${s3(skewSelective / uniSelective)},""" +
+    s"""{"metric":"skew_ratio","value":${s3(skewSelective / uniSelective)},""" +
       s""""skewed_selective":${s3(skewSelective)},"uniform_selective":${s3(uniSelective)},""" +
       s""""skewed_salted":${s3(skewSalted)},"uniform_salted":${s3(uniSalted)},""" +
-      s""""skewed_plain":${s3(skewPlain)},"max_key_share":${s3(share)},"sf":"$sfDir"}""")
-    spark.stop()
+      s""""skewed_plain":${s3(skewPlain)},"max_key_share":${s3(share)},"sf":"$sfDir"}"""
+  }
+
+  private def asOfSkew(spark: SparkSession, sfDir: String): String = {
+    val events = Tables.events(spark, sfDir).localCheckpoint()
+    val hotUser = 7L
+    val probes = events.select(
+      when(col("event_id") % 2 === 0, lit(hotUser))
+        .otherwise(col("user_id")).as("user_id"),
+      col("event_id"), col("ts"))
+    val quotes = events.filter(col("event_type") === "purchase").select(
+      when(col("event_id") % 2 === 0, lit(hotUser))
+        .otherwise(col("user_id")).as("user_id"),
+      col("ts"), col("value"))
+      // the operator's documented determinism contract: one quote per
+      // (key, ts) — the planted hot key merges many users' purchases,
+      // which DO collide on exact timestamps at 10M events
+      .groupBy(col("user_id"), col("ts")).agg(max(col("value")).as("value"))
+    val cols = Seq("ts" -> "qts", "value" -> "qv")
+    val share = probes.groupBy(col("user_id")).count()
+      .agg(max(col("count")).cast("double") / sum(col("count")))
+      .head().getDouble(0)
+
+    def plain() = plans.AsOfJoin.join(probes, quotes, "user_id", "ts", cols)
+    def salted() = plans.AsOfJoin.joinSalted(probes, quotes, "user_id", "ts",
+      cols, salt = 8, hotKeys = Seq(hotUser), saltBy = "event_id")
+
+    // equality first: same matched quote per probe (compare a stable
+    // aggregate fingerprint — sums over 10M rows, order-free)
+    def fp(df: DataFrame) = df.agg(
+      count(lit(1)),
+      // decimal sums, NOT long/double: 10M rows x 1.7e15 µs overflows
+      // BIGINT, and a double sum is association-order-dependent across
+      // plans — both would fail equality on identical row sets
+      sum(unix_micros(col("qts")).cast("decimal(38,0)")),
+      sum(col("qv").cast("decimal(28,6)")),
+      sum(when(col("qts").isNull, 1L).otherwise(0L))).head().toSeq
+    require(fp(plain()) == fp(salted()), "salted as-of diverged from plain")
+
+    val tPlain = best2(plain())
+    val tSalted = best2(salted())
+    s"""{"metric":"asof_skew_ratio","value":${s3(tSalted / tPlain)},""" +
+      s""""plain":${s3(tPlain)},"salted":${s3(tSalted)},""" +
+      s""""max_key_share":${s3(share)},"sf":"$sfDir"}"""
   }
 }

@@ -14,16 +14,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val patients = args.headOption.map(_.toInt).getOrElse(100)
     val seconds = args.lift(1).map(_.toDouble).getOrElse(600.0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
 
     // UNTIMED in-JVM warmup: a fresh JVM spends its first tens of seconds
     // JIT-compiling the whole streaming stack, and with fixed work (300k

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,15 @@ object Verify {
     val selected =
       if (args.length <= 2) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.drop(2).toSet).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Session()
     // cluster-shape overrides for the config-invariance sweep: a 100 TB
     // deployment runs AQE with shuffle.partitions=200 (the Spark
     // default), not the local thread count — results must be identical
     // under both shapes (BASELINE.md records the 427/427 sweep)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (aqe.nonEmpty) b.config("spark.sql.adaptive.enabled", aqe)
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.install() // keep WindowExec's per-task warning out of the tail
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    sys.env.get("SPARK_GRAFT_AQE").filter(_.nonEmpty)
+      .foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { case (name, fn) =>

@@ -41,11 +41,7 @@ object EmbedQuality {
         val a = emb.select(col("vec_id").as("i"), col("v").as("vi"))
         val b = emb.select(col("vec_id").as("j"), col("v").as("vj"))
         val w = Window.partitionBy(col("i")).orderBy(col("dq"), col("j"))
-        // round 10 (q189's lesson): the capped sample is ONE partition —
-        // repartition the probe side so the pair cosines compute on all
-        // cores (hash(i) also feeds the rank window, no extra exchange),
-        // and broadcast the bounded build side explicitly
-        val nn = a.repartition(col("i")).join(broadcast(b), col("i") =!= col("j"))
+        val nn = a.join(b, col("i") =!= col("j"))
           .select(col("i"), col("j"),
             floor((lit(1.0) - Similarity.cosine(col("vi"), col("vj")))
               * lit(1e6) + lit(0.5)).cast("long").as("dq"))
@@ -401,8 +397,7 @@ object EmbedQuality {
         val b = emb.select(col("vec_id").as("j"), col("label").as("lb"),
           col("v").as("vj"))
         val w = Window.partitionBy(col("i")).orderBy(col("dq"), col("j"))
-        // round 10: same single-partition fix as q347/q345
-        val agree = a.repartition(col("i")).join(broadcast(b), col("i") =!= col("j"))
+        val agree = a.join(b, col("i") =!= col("j"))
           .select(col("i"), col("la"), col("j"),
             (col("la") === col("lb")).as("same"),
             floor((lit(1.0) - Similarity.cosine(col("vi"), col("vj")))

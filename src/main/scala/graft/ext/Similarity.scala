@@ -172,12 +172,8 @@ object Similarity {
         val emb = capCorpus(Tables.embeddings(s, d)
           .select(col("vec_id"), toDouble(col("embedding")).as("v")))
         // threshold on the ROUNDED cosine so a pair straddling 0.4 by a
-        // few ulps cannot appear in one engine and not the other.
-        // round 10: the TakeOrdered cap leaves ONE partition — without
-        // the repartition the whole |corpus|²/2 cosine pass ran in one
-        // task (q189's lesson); broadcast the probe side explicitly
-        emb.repartition(col("vec_id")).as("a")
-          .join(broadcast(emb.as("b")), col("a.vec_id") < col("b.vec_id"))
+        // few ulps cannot appear in one engine and not the other
+        emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
             graft.Num.r4(cosine(col("a.v"), col("b.v"))).as("cosine"))
           .filter(col("cosine") > 0.4)

@@ -42,12 +42,7 @@ object Similarity2 {
           .localCheckpoint() // bounded baseline corpus, reused both sides
         val other = emb.select(col("vec_id").as("j"), col("label").as("lab_j"),
           col("v").as("vj"))
-        // round 10 (same fix as q189(b)): the checkpointed capCorpus is
-        // SinglePartition, so without a repartition the whole |corpus|²
-        // cosine pass ran in ONE task; hashing by vec_id also satisfies
-        // the (vec_id, label, lab_j) grouping below, so no extra
-        // exchange appears (AQE sizes the partition count)
-        val perLabel = emb.repartition(col("vec_id")).crossJoin(broadcast(other))
+        val perLabel = emb.crossJoin(other)
           .filter(col("vec_id") =!= col("j"))
           .select(col("vec_id"), col("label"), col("lab_j"),
             floor(Similarity.cosine(col("v"), col("vj")) * lit(10000.0) +

@@ -10,10 +10,9 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
   * broadcast join) → watermark → one fused per-key stateful operator
   * ([[HealthStateProcessor]]) → alerts.
   *
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass =
-  * ...state.RocksDBStateStoreProvider`) — `transformWithState` does not
-  * run on the default HDFS-backed store.
+  * Requires the RocksDB state store provider, which [[graft.Session]]
+  * sets for every session it starts — `transformWithState` does not run
+  * on the default HDFS-backed store.
   */
 object StreamingHealth {
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop micro-bench (test tree only; the driver artifact stays
   * `graft.Bench`): runs each named query N times in one JVM and prints
   * min/median — min-of-N in a warm JVM is far more stable than the
@@ -10,18 +8,9 @@ object QuickBench {
   def main(args: Array[String]): Unit = {
     val reps = sys.env.getOrElse("QB_REPS", "6").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    Quiet.install()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("QB_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.install()
+    val spark = Session()
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+      sys.env.getOrElse("QB_PARALLELISM_FIRST", "true"))
     val unknown = args.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(",")}")
     args.foreach { name =>

@@ -3,20 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite. */
+/** One shared local session per suite, from the same factory as the mains. */
 trait SparkSpec extends AnyFunSuite {
-  protected def extraConfs: Map[String, String] = Map.empty
-
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConfs.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
+  lazy val spark: SparkSession = Session()
 
   def sf(d: String = "0.001"): String = s"/root/testdata/sf$d"
 }

@@ -63,6 +63,21 @@ class GoldenAvroSpec extends SparkSpec {
       assert(h.vitals.body_temperature_c == e("body_temperature_c").toFloat)
       assert(h.event_time.getTime == ts, s"rec $i rowtime")
     }
+    // the column twin on the Kafka-source shape: binary `value` plus the
+    // record `timestamp`, decoded inside a DataFrame
+    val sql = spark
+    import sql.implicits._
+    val frames = records.indices.map { i =>
+      (bytes(f"ref_$i%02d.bin"),
+        new java.sql.Timestamp(records(i)("event_time_ms").toLong))
+    }
+    val viaColumn = frames.toDF("value", "timestamp")
+      .select(ConfluentAvro.decodeReferenceEvent(
+        org.apache.spark.sql.functions.col("value"),
+        org.apache.spark.sql.functions.col("timestamp")).as("e"))
+      .select("e.*").as[graft.Schemas.HealthEvent].collect().toSeq
+    assert(viaColumn == frames.map { case (b, ts) =>
+      ConfluentAvro.decodeReferenceFrame(b, ts.getTime) })
   }
 
   test("graft-schema frames decode via the production decode()") {

@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   * without re-emitting or losing windows. */
 class RecoverySpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private lazy val sim = new Simulator(seed = 21L, tickSeconds = 1.0, patients = 3)
 
   test("streaming enrichment join attaches dimension columns per event") {

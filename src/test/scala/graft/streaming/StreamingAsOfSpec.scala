@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   * appears exactly once. */
 class StreamingAsOfSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def ckpt() = java.nio.file.Files
     .createTempDirectory(java.nio.file.Paths.get("target"), "ckpt").toString
 

@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   * batch query's numbers. */
 class StreamingBacktestSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val WindowMs = 5000L
   private val MinTrain = 20
 

@@ -15,10 +15,6 @@ import org.apache.spark.sql.functions._
   * and all. A planted jump after a calm warm-up must breach. */
 class StreamingConformalSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val WindowMs = 5000L
   private val MinTrain = 10
 

@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   * side averages raw doubles, the stream folds exact micro units). */
 class StreamingCumulateSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def ckpt() = java.nio.file.Files
     .createTempDirectory(java.nio.file.Paths.get("target"), "ckpt").toString
 

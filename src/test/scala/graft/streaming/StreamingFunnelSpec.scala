@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   * sort must absorb intra-chunk disorder). */
 class StreamingFunnelSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   test("streaming funnel == batch q95 on the events table") {
     val rows = Tables.events(spark, sf())
       .select(col("user_id").cast("long"), col("ts"),

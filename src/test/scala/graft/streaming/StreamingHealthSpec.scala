@@ -13,10 +13,6 @@ import org.apache.spark.sql.functions._
   * with the batch ops on identical input. */
 class StreamingHealthSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val WindowMs = 5000L
   private val MinTrain = 20
   private val Threshold = 40.0

@@ -10,10 +10,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * invariant to arrival order (the watermark-ordered fold re-sorts). */
 class StreamingIntervalsSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def tmp(prefix: String) = java.nio.file.Files
     .createTempDirectory(java.nio.file.Paths.get("target"), prefix).toString
 

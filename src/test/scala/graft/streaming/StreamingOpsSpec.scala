@@ -9,10 +9,6 @@ import org.apache.spark.sql.functions._
   * MemoryStream, cross-checked against batch results on the same data. */
 class StreamingOpsSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val origin = 1704067200000L
   private def ts(sec: Long) = new java.sql.Timestamp(origin + sec * 1000)
 

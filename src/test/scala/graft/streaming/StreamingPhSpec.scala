@@ -15,10 +15,6 @@ import org.apache.spark.sql.functions._
   * downward-drift alarm fires for the bradycardia patient only. */
 class StreamingPhSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val WindowMs = 5000L
   private val MinTrain = 10
   // δ must absorb the simulator's healthy wander (±5 bpm around a

@@ -17,10 +17,6 @@ final case class IngestDoc(doc_id: Long, text: String)
 
 class StreamingPipelineSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def ckpt() = java.nio.file.Files
     .createTempDirectory(java.nio.file.Paths.get("target"), "ckpt").toString
 

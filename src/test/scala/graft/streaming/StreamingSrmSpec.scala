@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   * seen-user set makes re-deliveries of a user idempotent). */
 class StreamingSrmSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private val byName = Registry.all.map(q => q.name -> q).toMap
 
   private def runStream(events: Seq[SrmEvent], name: String): Map[String, SrmSnapshot] = {

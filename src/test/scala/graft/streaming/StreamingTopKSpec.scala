@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   * arrival order, so the assertions are shuffle-safe. */
 class StreamingTopKSpec extends SparkSpec {
 
-  override protected def extraConfs: Map[String, String] = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def runStream(events: Seq[HHEvent], capacity: Int, k: Int,
       name: String): Array[HHSnapshot] = {
     val mem = MemoryStream[HHEvent](Encoders.product[HHEvent], spark)

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Run a graft main class outside sbt (same JVM flags build.sbt forks
-# with): tools/run.sh <MainClass> [args...]
+# Run a graft main class outside sbt (same module flags and heap that
+# build.sbt forks with; graft.Session sets the Spark config):
+# tools/run.sh <MainClass> [args...]
 # e.g. tools/run.sh graft.ScaleUp /root/testdata/sf0.1 data/sf10 100
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -13,6 +14,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
