@@ -6,7 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args = subset of query names (dev loop, like
-    // Bench); the driver passes exactly two args and gets everything
+    // Bench); the driver passes exactly two args and gets everything.
+    // Unknown names fail before the session starts: filterKeys alone
+    // dropped them and wrote an empty oracle_sql.json that read as clean
+    val unknown = args.drop(2).toSet -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"[verify] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
     val selected =
       if (args.length <= 2) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.drop(2).toSet).toMap

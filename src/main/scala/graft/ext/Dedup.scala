@@ -68,25 +68,34 @@ object Dedup {
   /** MinHash signatures: K modular permutations of the shingle hash,
     * MIN per doc — one narrow aggregate after the shingle shuffle. */
   def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
-    docShingles(docs, n)
-      .select(col("doc_id"), hp(col("sh")).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(min((col("h") * permA(0) + permB(0)) % P).as("m0"),
-        (1 until K).map(k =>
-          min((col("h") * permA(k) + permB(k)) % P).as(s"m$k")): _*)
+    signatures(docShingles(docs, n).select(col("doc_id"), hp(col("sh")).as("h")), "h")
 
-  /** LSH candidate pairs: docs sharing any band of the signature.
-    * Band key packs its rows into one long (rows are < P < 2^30). */
-  def lshCandidates(sigs: DataFrame): DataFrame = {
+  /** K-permutation MinHash aggregate over a (doc_id, `h`) frame of
+    * shingle hashes: m0..m(K-1), one row per doc. */
+  private def signatures(hashed: DataFrame, h: String): DataFrame =
+    hashed.groupBy(col("doc_id"))
+      .agg(min((col(h) * permA(0) + permB(0)) % P).as("m0"),
+        (1 until K).map(k =>
+          min((col(h) * permA(k) + permB(k)) % P).as(s"m$k")): _*)
+
+  /** Band b's packing: (signature column, weight) per row, the key being
+    * the weighted sum in one long (rows are < P < 2^30). */
+  private def bandTerms(b: Int): Seq[(String, Long)] = {
     val rows = K / Bands
-    val bandKey = (b: Int) => (0 until rows)
-      .map(r => col(s"m${b * rows + r}") * math.pow(2, 31 * r).toLong)
-      .reduce(_ + _)
-    val banded = sigs.select(col("doc_id") +:
-      (0 until Bands).map(b => bandKey(b).as(s"band$b")): _*)
+    (0 until rows).map(r => (s"m${b * rows + r}", math.pow(2, 31 * r).toLong))
+  }
+
+  /** (doc_id, band, key) rows of a signatures frame, one per band. */
+  def bandKeys(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id") +: (0 until Bands).map(b =>
+      bandTerms(b).map { case (m, w) => col(m) * w }.reduce(_ + _).as(s"band$b")): _*)
       .select(col("doc_id"), explode(array((0 until Bands).map(b =>
         struct(lit(b).as("band"), col(s"band$b").as("key"))): _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+
+  /** LSH candidate pairs: docs sharing any band of the signature. */
+  def lshCandidates(sigs: DataFrame): DataFrame = {
+    val banded = bandKeys(sigs)
     banded.as("a").join(banded.as("b"),
       col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.doc_id") < col("b.doc_id"))
@@ -156,28 +165,28 @@ object Dedup {
         shraw AS (SELECT doc_id, unnest($sqlShingles) AS sh FROM toks),
         sh AS (SELECT DISTINCT doc_id, sh FROM shraw)"""
 
-  private[ext] def sqlDocShingles =
-    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        shraw AS (SELECT doc_id, unnest($sqlShingles) AS sh FROM toks),
-        sh AS (SELECT DISTINCT doc_id, sh FROM shraw)"""
+  private[ext] def sqlDocShingles = sqlDocShinglesFrom("documents")
 
-  /** The full shingle→signature→LSH-candidate→Jaccard-verified CTE
-    * chain (threshold 0.8, r4-rounded), shared by the q80/q84 oracles. */
-  private def sqlVerifiedCtes: String = {
-    val rows = K / Bands
-    val bandKeySql = (b: Int) => (0 until rows)
-      .map(r => s"m${b * rows + r} * ${math.pow(2, 31 * r).toLong}")
-      .mkString(" + ")
-    s"""$sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh),
+  /** Shingles plus their hash `h` per doc. */
+  private def sqlHashedShingles = s"""$sqlDocShingles,
+        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh)"""
+
+  /** The K MinHash columns m0..m(K-1) over a hash column `h`. */
+  private def sqlSigCols = (0 until K).map(k =>
+    s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n            ")
+
+  /** Shingle→signature→LSH-candidate chain: `cand` (doc_a < doc_b), the
+    * per-doc shingle `counts` and each candidate's shingle intersection
+    * `inter` — shared by the q35/q80/q84/q89/q224/q225/q257 oracles. */
+  private def sqlCandidateCtes: String = s"""$sqlHashedShingles,
         sig AS (
           SELECT doc_id,
-            ${(0 until K).map(k =>
-              s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n            ")}
+            $sqlSigCols
           FROM h GROUP BY doc_id),
         banded AS (
           ${(0 until Bands).map(b =>
-            s"SELECT doc_id, $b AS band, ${bandKeySql(b)} AS key FROM sig")
+            s"SELECT doc_id, $b AS band, ${bandTerms(b).map { case (m, w) =>
+              s"$m * $w" }.mkString(" + ")} AS key FROM sig")
             .mkString("\n          UNION ALL ")}),
         cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -189,7 +198,24 @@ object Dedup {
           FROM cand c
           JOIN sh sa ON sa.doc_id = c.doc_a
           JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-          GROUP BY c.doc_a, c.doc_b),
+          GROUP BY c.doc_a, c.doc_b)"""
+
+  /** The candidate chain plus `ex`: each candidate's exact Jaccard
+    * micro-quantized to int64 `exq` (q224/q225/q257). */
+  private def sqlExactCtes: String = s"""$sqlCandidateCtes,
+        ex AS (
+          SELECT c.doc_a, c.doc_b,
+            CAST(FLOOR((COALESCE(i.n_inter, 0)
+                / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0)))
+                * 1000000 + 0.500001) AS BIGINT) AS exq
+          FROM cand c
+          LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
+          JOIN counts ca ON ca.doc_id = c.doc_a
+          JOIN counts cb ON cb.doc_id = c.doc_b)"""
+
+  /** The candidate chain plus `verified`: candidates with r4-rounded
+    * Jaccard ≥ 0.8 (q80/q84/q89). */
+  private def sqlVerifiedCtes: String = s"""$sqlCandidateCtes,
         verified AS (
           SELECT c.doc_a, c.doc_b
           FROM cand c
@@ -197,7 +223,22 @@ object Dedup {
           JOIN counts ca ON ca.doc_id = c.doc_a
           JOIN counts cb ON cb.doc_id = c.doc_b
           WHERE FLOOR((COALESCE(i.n_inter, 0) / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0))) * 10000 + 0.500001) / 10000 >= 0.8)"""
-  }
+
+  /** SimHash per-bit `votes` over each doc's distinct tokens (CTE `tok`)
+    * and their hashes (CTE `hashed`); [[sqlSimhashFp]] packs the bits. */
+  private def sqlSimhashVotes(tok: String, hashed: String): String =
+    s"""$tok AS (
+          SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS t
+          FROM documents),
+        $hashed AS (SELECT doc_id, ${sqlH60("t")} AS h FROM $tok),
+        votes AS (
+          SELECT doc_id,
+            ${(0 until SimBits).map(b =>
+              s"SUM(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS b$b")
+              .mkString(",\n            ")}
+          FROM $hashed GROUP BY doc_id)"""
+  private def sqlSimhashFp: String = (0 until SimBits).map(b =>
+    s"(CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
 
   /** Transitive near-dup clusters: (doc_id, cluster_id, cluster_size),
     * cluster_id = the smallest doc_id reachable through the undirected
@@ -341,12 +382,7 @@ object Dedup {
     val repHashed = hashed.join(
       memb.filter(col("doc_id") === col("rep")).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
-    val sigs = repHashed
-      .groupBy(col("doc_id"))
-      .agg(min((col("sh") * permA(0) + permB(0)) % P).as("m0"),
-        (1 until K).map(k =>
-          min((col("sh") * permA(k) + permB(k)) % P).as(s"m$k")): _*)
-      .localCheckpoint()
+    val sigs = signatures(repHashed, "sh").localCheckpoint()
     val stats = jaccard(lshCandidates(sigs), repHashed)
       .localCheckpoint()
     val nsh = repHashed.groupBy(col("doc_id"))
@@ -359,6 +395,18 @@ object Dedup {
   /** Exact-duplicate group sizes over shingle-bearing docs: (rep, c). */
   private def groupSizes(idx: RepIndex): DataFrame =
     idx.memb.groupBy(col("rep")).agg(count(lit(1)).as("c"))
+
+  /** Rep pairs with their exact Jaccard micro-quantized to int64 `exq`. */
+  private def repExq(idx: RepIndex): DataFrame =
+    idx.stats.select(col("doc_a"), col("doc_b"),
+      floor(col("jaccard") * 1000000 + lit(0.500001)).cast("long").as("exq"))
+
+  /** Attach both sides' group sizes `ca`/`cb`: a rep pair stands for
+    * |A|·|B| doc pairs. */
+  private def withGroupSizes(pairs: DataFrame, csize: DataFrame): DataFrame =
+    pairs
+      .join(csize.select(col("rep").as("doc_a"), col("c").as("ca")), "doc_a")
+      .join(csize.select(col("rep").as("doc_b"), col("c").as("cb")), "doc_b")
 
   /** Per-doc smallest verified near-dup partner (`dup_of`), expanded
     * from the rep-level relation: a doc's partners are its own group's
@@ -384,11 +432,9 @@ object Dedup {
       "q34_minhash_signatures",
       (s, d) => minhashSignatures(Tables.documents(s, d)).orderBy(col("doc_id")),
       Some(s"""
-        WITH $sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh)
+        WITH $sqlHashedShingles
         SELECT doc_id,
-          ${(0 until K).map(k =>
-            s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n          ")}
+          $sqlSigCols
         FROM h GROUP BY doc_id ORDER BY doc_id"""),
       "MinHash signatures (K=8 modular permutations over 3-gram shingles), oracle-exact integer hashing"),
 
@@ -437,34 +483,8 @@ object Dedup {
               (col("na") + col("nb") - col("n_inter"))).as("jaccard"))
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some {
-        val rows = K / Bands
-        val bandKeySql = (b: Int) => (0 until rows)
-          .map(r => s"m${b * rows + r} * ${math.pow(2, 31 * r).toLong}")
-          .mkString(" + ")
-        s"""
-        WITH $sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh),
-        sig AS (
-          SELECT doc_id,
-            ${(0 until K).map(k =>
-              s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n            ")}
-          FROM h GROUP BY doc_id),
-        banded AS (
-          ${(0 until Bands).map(b =>
-            s"SELECT doc_id, $b AS band, ${bandKeySql(b)} AS key FROM sig")
-            .mkString("\n          UNION ALL ")}),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        counts AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-          GROUP BY c.doc_a, c.doc_b)
+      Some(s"""
+        WITH $sqlCandidateCtes
         SELECT c.doc_a, c.doc_b,
           COALESCE(i.n_inter, 0) AS n_inter, ca.n_sh AS n_a, cb.n_sh AS n_b,
           FLOOR((COALESCE(i.n_inter, 0) / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0))) * 10000 + 0.500001) / 10000 AS jaccard
@@ -472,8 +492,7 @@ object Dedup {
         LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
         JOIN counts ca ON ca.doc_id = c.doc_a
         JOIN counts cb ON cb.doc_id = c.doc_b
-        ORDER BY c.doc_a, c.doc_b"""
-      },
+        ORDER BY c.doc_a, c.doc_b"""),
       "MinHash-LSH near-dup: banded candidate join + exact Jaccard verification on candidates only"),
 
     // --------------------------------------------------------------- q224
@@ -509,14 +528,9 @@ object Dedup {
         val matches = (0 until K)
           .map(k => when(col(s"sa.m$k") === col(s"sb.m$k"), 1).otherwise(0))
           .reduce(_ + _)
-        val cross = idx.stats
-          .select(col("doc_a"), col("doc_b"),
-            floor(col("jaccard") * 1000000 + lit(0.500001)).cast("long")
-              .as("exq"))
+        val cross = withGroupSizes(repExq(idx)
           .join(idx.sigs.as("sa"), col("doc_a") === col("sa.doc_id"))
-          .join(idx.sigs.as("sb"), col("doc_b") === col("sb.doc_id"))
-          .join(csize.select(col("rep").as("doc_a"), col("c").as("ca")), "doc_a")
-          .join(csize.select(col("rep").as("doc_b"), col("c").as("cb")), "doc_b")
+          .join(idx.sigs.as("sb"), col("doc_b") === col("sb.doc_id")), csize)
           .select(col("exq"), matches.as("matches"),
             (col("ca") * col("cb")).as("mult"))
         val within = csize.filter(col("c") >= 2)
@@ -537,45 +551,11 @@ object Dedup {
           .orderBy(col("matches"))
       },
       Some {
-        val rows = K / Bands
-        val bandKeySql = (b: Int) => (0 until rows)
-          .map(r => s"m${b * rows + r} * ${math.pow(2, 31 * r).toLong}")
-          .mkString(" + ")
         val matchSql = (0 until K)
           .map(k => s"CASE WHEN a.m$k = b.m$k THEN 1 ELSE 0 END")
           .mkString(" + ")
         s"""
-        WITH $sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh),
-        sig AS (
-          SELECT doc_id,
-            ${(0 until K).map(k =>
-              s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n            ")}
-          FROM h GROUP BY doc_id),
-        banded AS (
-          ${(0 until Bands).map(b =>
-            s"SELECT doc_id, $b AS band, ${bandKeySql(b)} AS key FROM sig")
-            .mkString("\n          UNION ALL ")}),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        counts AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-          GROUP BY c.doc_a, c.doc_b),
-        ex AS (
-          SELECT c.doc_a, c.doc_b,
-            CAST(FLOOR((COALESCE(i.n_inter, 0)
-                / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0)))
-                * 1000000 + 0.500001) AS BIGINT) AS exq
-          FROM cand c
-          LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-          JOIN counts ca ON ca.doc_id = c.doc_a
-          JOIN counts cb ON cb.doc_id = c.doc_b),
+        WITH $sqlExactCtes,
         mm AS (
           SELECT e.exq, ($matchSql) AS matches
           FROM ex e
@@ -616,16 +596,11 @@ object Dedup {
         val idx = repCollapse(s, d)
         val csize = groupSizes(idx)
         val sh = simhash(Tables.documents(s, d)) // (doc_id, simhash)
-        val cross = idx.stats
-          .select(col("doc_a"), col("doc_b"),
-            floor(col("jaccard") * 1000000 + lit(0.500001)).cast("long")
-              .as("exq"))
+        val cross = withGroupSizes(repExq(idx)
           .join(sh.select(col("doc_id").as("doc_a"), col("simhash").as("ha")),
             Seq("doc_a"))
           .join(sh.select(col("doc_id").as("doc_b"), col("simhash").as("hb")),
-            Seq("doc_b"))
-          .join(csize.select(col("rep").as("doc_a"), col("c").as("ca")), "doc_a")
-          .join(csize.select(col("rep").as("doc_b"), col("c").as("cb")), "doc_b")
+            Seq("doc_b")), csize)
           .select(col("exq"),
             bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"),
             (col("ca") * col("cb")).as("mult"))
@@ -646,58 +621,11 @@ object Dedup {
               / (col("n_pairs") * lit(1000000.0))).as("mean_exact"))
           .orderBy(col("hamming"))
       },
-      Some {
-        val rows = K / Bands
-        val bandKeySql = (b: Int) => (0 until rows)
-          .map(r => s"m${b * rows + r} * ${math.pow(2, 31 * r).toLong}")
-          .mkString(" + ")
-        s"""
-        WITH $sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh),
-        sig AS (
-          SELECT doc_id,
-            ${(0 until K).map(k =>
-              s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k").mkString(",\n            ")}
-          FROM h GROUP BY doc_id),
-        banded AS (
-          ${(0 until Bands).map(b =>
-            s"SELECT doc_id, $b AS band, ${bandKeySql(b)} AS key FROM sig")
-            .mkString("\n          UNION ALL ")}),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        counts AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-          GROUP BY c.doc_a, c.doc_b),
-        ex AS (
-          SELECT c.doc_a, c.doc_b,
-            CAST(FLOOR((COALESCE(i.n_inter, 0)
-                / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0)))
-                * 1000000 + 0.500001) AS BIGINT) AS exq
-          FROM cand c
-          LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-          JOIN counts ca ON ca.doc_id = c.doc_a
-          JOIN counts cb ON cb.doc_id = c.doc_b),
-        tk AS (
-          SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS t
-          FROM documents),
-        th AS (SELECT doc_id, ${sqlH60("t")} AS h FROM tk),
-        votes AS (
-          SELECT doc_id,
-            ${(0 until SimBits).map(b =>
-              s"SUM(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS b$b")
-              .mkString(",\n            ")}
-          FROM th GROUP BY doc_id),
+      Some(s"""
+        WITH $sqlExactCtes,
+        ${sqlSimhashVotes("tk", "th")},
         fp AS (
-          SELECT doc_id,
-            ${(0 until SimBits).map(b =>
-              s"(CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")}
-              AS simhash
+          SELECT doc_id, $sqlSimhashFp AS simhash
           FROM votes),
         mm AS (
           SELECT e.exq,
@@ -711,8 +639,7 @@ object Dedup {
                  / COUNT(*)) * 1000000 + 0.500001) / 1000000 AS true_share,
           FLOOR((CAST(SUM(exq) AS DOUBLE) / (COUNT(*) * 1000000.0))
                 * 1000000 + 0.500001) / 1000000 AS mean_exact
-        FROM mm GROUP BY hamming ORDER BY hamming"""
-      },
+        FROM mm GROUP BY hamming ORDER BY hamming"""),
       "SimHash-vs-exact-Jaccard calibration on the LSH candidates: per-Hamming-bucket true-near-dup share + mean Jaccard — the SimHash radius tuning table"),
 
     // ---------------------------------------------------------------- q80
@@ -922,19 +849,8 @@ object Dedup {
       "q36_simhash",
       (s, d) => simhash(Tables.documents(s, d)).orderBy(col("doc_id")),
       Some(s"""
-        WITH toks AS (
-          SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS t
-          FROM documents),
-        h AS (SELECT doc_id, ${sqlH60("t")} AS h FROM toks),
-        votes AS (
-          SELECT doc_id,
-            ${(0 until SimBits).map(b =>
-              s"SUM(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS b$b")
-              .mkString(",\n            ")}
-          FROM h GROUP BY doc_id)
-        SELECT doc_id,
-          ${(0 until SimBits).map(b =>
-            s"(CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")} AS simhash
+        WITH ${sqlSimhashVotes("toks", "h")}
+        SELECT doc_id, $sqlSimhashFp AS simhash
         FROM votes ORDER BY doc_id"""),
       "32-bit SimHash fingerprints (per-bit majority vote of token hashes)"),
 
@@ -966,11 +882,7 @@ object Dedup {
         val idx = repCollapse(s, d)
         val docs = Tables.documents(s, d)
         val csize = groupSizes(idx)
-        val ex = idx.stats
-          .select(col("doc_a"), col("doc_b"),
-            floor(col("jaccard") * 1000000 + lit(0.500001)).cast("long")
-              .as("exq"))
-          .localCheckpoint() // rep pairs scored once, swept 5×
+        val ex = repExq(idx).localCheckpoint() // rep pairs scored once, swept 5×
         val tk = docs.select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("ntok"))
         val tot = tk.agg(sum(col("ntok")).as("total_tokens")) // 1 row
@@ -978,9 +890,7 @@ object Dedup {
         val fired = ex.crossJoin(broadcast(spine))
           .filter(col("exq") >= col("tenths") * lit(100000L))
           .localCheckpoint() // consumed by the pair count AND the drop set
-        val crossPairs = fired
-          .join(csize.select(col("rep").as("doc_a"), col("c").as("ca")), "doc_a")
-          .join(csize.select(col("rep").as("doc_b"), col("c").as("cb")), "doc_b")
+        val crossPairs = withGroupSizes(fired, csize)
           .groupBy(col("tenths"))
           .agg(sum(col("ca") * col("cb")).as("np"))
         val withinPairs = csize
@@ -1017,44 +927,8 @@ object Dedup {
               .cast("double") / col("total_tokens")).as("savings_share"))
           .orderBy(col("threshold_tenths"))
       },
-      Some {
-        val rows = K / Bands
-        val bandKeySql = (b: Int) => (0 until rows)
-          .map(r => s"m${b * rows + r} * ${math.pow(2, 31 * r).toLong}")
-          .mkString(" + ")
-        s"""
-        WITH $sqlDocShingles,
-        h AS (SELECT doc_id, ${sqlHp("sh")} AS h FROM sh),
-        sig AS (
-          SELECT doc_id,
-            ${(0 until K).map(k =>
-              s"MIN((h * ${permA(k)} + ${permB(k)}) % $P) AS m$k")
-              .mkString(",\n            ")}
-          FROM h GROUP BY doc_id),
-        banded AS (
-          ${(0 until Bands).map(b =>
-            s"SELECT doc_id, $b AS band, ${bandKeySql(b)} AS key FROM sig")
-            .mkString("\n          UNION ALL ")}),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM banded a JOIN banded b
-            ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-        counts AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-          SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.sh = sa.sh
-          GROUP BY c.doc_a, c.doc_b),
-        ex AS (
-          SELECT c.doc_a, c.doc_b,
-            CAST(FLOOR((COALESCE(i.n_inter, 0)
-                / (ca.n_sh + cb.n_sh - COALESCE(i.n_inter, 0)))
-                * 1000000 + 0.500001) AS BIGINT) AS exq
-          FROM cand c
-          LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
-          JOIN counts ca ON ca.doc_id = c.doc_a
-          JOIN counts cb ON cb.doc_id = c.doc_b),
+      Some(s"""
+        WITH $sqlExactCtes,
         tk AS (SELECT doc_id,
                  CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
                FROM documents),
@@ -1082,7 +956,6 @@ object Dedup {
         LEFT JOIN pp ON pp.tenths = s.tenths
         LEFT JOIN dr ON dr.tenths = s.tenths
         CROSS JOIN tot
-        ORDER BY threshold_tenths"""
-      },
+        ORDER BY threshold_tenths"""),
       "dedup-threshold savings curve: pairs fired, greedy-dropped docs and token savings share for Jaccard cut-offs 0.5-0.9 over the LSH candidates"))
 }

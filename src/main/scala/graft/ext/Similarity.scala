@@ -162,6 +162,16 @@ object Similarity {
       .filter(col("rn") <= k)
   }
 
+  /** SQL twins of the 64-dim cosine: identical fold order to
+    * graft.functions.DotProduct (products in index-ascending order,
+    * sequential sum), r`digits`-rounded. */
+  private def dotSql(a: String, b: String) =
+    s"list_sum([$a[i] * $b[i] FOR i IN range(1, 65)])"
+  private def selfSql(a: String) = s"list_sum([x * x FOR x IN $a])"
+  private def cosSql(a: String, b: String, digits: Int) = graft.Num.sql(
+    s"${dotSql(a, b)} / (sqrt(${selfSql(a)}) * sqrt(${selfSql(b)}))",
+    digits)
+
   def queries: Seq[Query] = Seq(
     // ---------------------------------------------------------------- q37
     Query(
@@ -253,14 +263,6 @@ object Similarity {
           .orderBy(col("query_id"), col("rn"))
       },
       Some {
-        // identical fold order to graft.functions.DotProduct: products
-        // in index-ascending order, sequential sum
-        def dotSql(a: String, b: String) =
-          s"list_sum([$a[i] * $b[i] FOR i IN range(1, 65)])"
-        def selfSql(a: String) = s"list_sum([x * x FOR x IN $a])"
-        def cosSql(a: String, b: String, digits: Int) = graft.Num.sql(
-          s"${dotSql(a, b)} / (sqrt(${selfSql(a)}) * sqrt(${selfSql(b)}))",
-          digits)
         s"""
         WITH emb AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -331,12 +333,6 @@ object Similarity {
         val planeRows = hyperplanes(32, 64).zipWithIndex.map { case (p, i) =>
           s"($i, [${p.mkString(",")}]::DOUBLE[])"
         }.mkString(",\n          ")
-        def dotSql(a: String, b: String) =
-          s"list_sum([$a[i] * $b[i] FOR i IN range(1, 65)])"
-        def selfSql(a: String) = s"list_sum([x * x FOR x IN $a])"
-        def cosSql(a: String, b: String, digits: Int) = graft.Num.sql(
-          s"${dotSql(a, b)} / (sqrt(${selfSql(a)}) * sqrt(${selfSql(b)}))",
-          digits)
         s"""
         WITH emb AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -579,12 +575,6 @@ object Similarity {
           .orderBy(col("vec_id"))
       },
       Some {
-        def dotSql(a: String, b: String) =
-          s"list_sum([$a[i] * $b[i] FOR i IN range(1, 65)])"
-        def selfSql(a: String) = s"list_sum([x * x FOR x IN $a])"
-        def cosSql(a: String, b: String, digits: Int) = graft.Num.sql(
-          s"${dotSql(a, b)} / (sqrt(${selfSql(a)}) * sqrt(${selfSql(b)}))",
-          digits)
         s"""
         WITH emb AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -795,12 +785,6 @@ object Similarity {
           .orderBy(col("nprobe"))
       },
       Some {
-        def dotSql(a: String, b: String) =
-          s"list_sum([$a[i] * $b[i] FOR i IN range(1, 65)])"
-        def selfSql(a: String) = s"list_sum([x * x FOR x IN $a])"
-        def cosSql(a: String, b: String, digits: Int) = graft.Num.sql(
-          s"${dotSql(a, b)} / (sqrt(${selfSql(a)}) * sqrt(${selfSql(b)}))",
-          digits)
         s"""
         WITH emb AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

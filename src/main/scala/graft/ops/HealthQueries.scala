@@ -19,6 +19,61 @@ object HealthQueries {
     * [[Health.tsDays]] bit-for-bit: integer epoch µs then one divide). */
   private val XDAYS = s"(epoch_us(ts) - ${Health.OriginUs}) / 86400000000.0"
 
+  /** The z-score baseline's statistics over the prior-rows frame — the
+    * oracle CTE shared by q22, q23 and q26. */
+  private val AnomalyStats = """WITH s AS (
+          SELECT user_id, event_id, ts, value,
+            AVG(value) OVER w AS mu,
+            STDDEV_SAMP(value) OVER w AS sigma,
+            COUNT(value) OVER w AS n_training
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))"""
+  private val IsAnomaly = s"""(n_training >= 30 AND sigma IS NOT NULL AND sigma > 0
+             AND ABS(value - mu) > $Z * sigma)"""
+
+  /** Cumulative OLS trend (`s`) and its 1-step forecast, MSE and
+    * timestamp (`f`) — the oracle CTE pair shared by q24, q25 and q27. */
+  private val ForecastCtes = s"""WITH s AS (
+          SELECT user_id, event_id, ts, value,
+            $XDAYS AS x,
+            COUNT(value) OVER w AS n,
+            REGR_SLOPE(value, $XDAYS) OVER w AS slope,
+            AVG($XDAYS) OVER w AS avg_x,
+            AVG(value) OVER w AS avg_y,
+            STDDEV_SAMP(value) OVER w AS sd_y,
+            CORR(value, $XDAYS) OVER w AS r,
+            MIN($XDAYS) OVER w AS min_x,
+            MAX($XDAYS) OVER w AS max_x
+          FROM events
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+        f AS (
+          SELECT user_id, event_id, value,
+            x + (max_x - min_x) / (n - 1) AS fts,
+            avg_y + slope * (x + (max_x - min_x) / (n - 1) - avg_x) AS fc,
+            (COALESCE(sd_y * sd_y, 0.0) * (n - 1) / n) * (1.0 - COALESCE(r * r, 0.0)) AS mse,
+            n, slope
+          FROM s)"""
+  /** q24's oracle, and q27's: the UDAF twin computes the same rows. */
+  private val ForecastSql = s"""
+        $ForecastCtes
+        SELECT user_id, event_id, value,
+          FLOOR((fts) * 1000000 + 0.500001) / 1000000 AS forecast_timestamp,
+          FLOOR((fc) * 10000 + 0.500001) / 10000 AS forecast_value,
+          FLOOR((fc - $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS lower_bound,
+          FLOOR((fc + $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS upper_bound,
+          FLOOR((SQRT(mse)) * 10000 + 0.500001) / 10000 AS rmse,
+          FLOOR((CASE WHEN mse > 0 THEN n * LN(mse) + 4.0 END) * 10000 + 0.500001) / 10000 AS aic
+        FROM f
+        WHERE n >= 30 AND slope IS NOT NULL
+        ORDER BY user_id, event_id"""
+
+  /** Per-user running frame through the current row, for the UDAF twins. */
+  private def cumulative = Window.partitionBy(col("user_id"))
+    .orderBy(col("ts"), col("event_id"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
   def queries: Seq[Query] = Seq(
     // ---------------------------------------------------------------- q20
     Query(
@@ -69,17 +124,9 @@ object HealthQueries {
             col("report.n_training").as("n_training"))
           .orderBy(col("user_id"), col("ts"), col("event_id")),
       Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, ts, value,
-            AVG(value) OVER w AS mu,
-            STDDEV_SAMP(value) OVER w AS sigma,
-            COUNT(value) OVER w AS n_training
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        $AnomalyStats
         SELECT user_id, event_id, ts, value,
-          (n_training >= 30 AND sigma IS NOT NULL AND sigma > 0
-             AND ABS(value - mu) > $Z * sigma) AS is_anomaly,
+          $IsAnomaly AS is_anomaly,
           FLOOR((mu) * 10000 + 0.500001) / 10000 AS expected,
           FLOOR((mu - $Z * sigma) * 10000 + 0.500001) / 10000 AS lower,
           FLOOR((mu + $Z * sigma) * 10000 + 0.500001) / 10000 AS upper,
@@ -97,18 +144,10 @@ object HealthQueries {
           .select(col("user_id"), col("event_id"), col("ts"), col("value"))
           .orderBy(col("user_id"), col("ts"), col("event_id")),
       Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, ts, value,
-            AVG(value) OVER w AS mu,
-            STDDEV_SAMP(value) OVER w AS sigma,
-            COUNT(value) OVER w AS n_training
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        $AnomalyStats
         SELECT user_id, event_id, ts, value
         FROM s
-        WHERE NOT (n_training >= 30 AND sigma IS NOT NULL AND sigma > 0
-                   AND ABS(value - mu) > $Z * sigma)
+        WHERE NOT $IsAnomaly
         ORDER BY user_id, ts, event_id"""),
       "statement [3] filtered_enriched_events: keep normal rows (F1)"),
 
@@ -127,38 +166,7 @@ object HealthQueries {
             graft.Num.r4(col("rmse")).as("rmse"),
             graft.Num.r4(col("aic")).as("aic"))
           .orderBy(col("user_id"), col("event_id")),
-      Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, ts, value,
-            $XDAYS AS x,
-            COUNT(value) OVER w AS n,
-            REGR_SLOPE(value, $XDAYS) OVER w AS slope,
-            AVG($XDAYS) OVER w AS avg_x,
-            AVG(value) OVER w AS avg_y,
-            STDDEV_SAMP(value) OVER w AS sd_y,
-            CORR(value, $XDAYS) OVER w AS r,
-            MIN($XDAYS) OVER w AS min_x,
-            MAX($XDAYS) OVER w AS max_x
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        f AS (
-          SELECT user_id, event_id, value,
-            x + (max_x - min_x) / (n - 1) AS fts,
-            avg_y + slope * (x + (max_x - min_x) / (n - 1) - avg_x) AS fc,
-            (COALESCE(sd_y * sd_y, 0.0) * (n - 1) / n) * (1.0 - COALESCE(r * r, 0.0)) AS mse,
-            n, slope
-          FROM s)
-        SELECT user_id, event_id, value,
-          FLOOR((fts) * 1000000 + 0.500001) / 1000000 AS forecast_timestamp,
-          FLOOR((fc) * 10000 + 0.500001) / 10000 AS forecast_value,
-          FLOOR((fc - $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS lower_bound,
-          FLOOR((fc + $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS upper_bound,
-          FLOOR((SQRT(mse)) * 10000 + 0.500001) / 10000 AS rmse,
-          FLOOR((CASE WHEN mse > 0 THEN n * LN(mse) + 4.0 END) * 10000 + 0.500001) / 10000 AS aic
-        FROM f
-        WHERE n >= 30 AND slope IS NOT NULL
-        ORDER BY user_id, event_id"""),
+      Some(ForecastSql),
       "statement [4a] ML_FORECAST baseline: per-key cumulative OLS trend, 1-step horizon (O1+M2+X2)"),
 
     // ---------------------------------------------------------------- q25
@@ -173,23 +181,7 @@ object HealthQueries {
             graft.Num.r4(col("forecast_value")).as("forecast_value"))
           .orderBy(col("user_id"), col("event_id")),
       Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, ts, value,
-            $XDAYS AS x,
-            COUNT(value) OVER w AS n,
-            REGR_SLOPE(value, $XDAYS) OVER w AS slope,
-            AVG($XDAYS) OVER w AS avg_x,
-            AVG(value) OVER w AS avg_y,
-            MIN($XDAYS) OVER w AS min_x,
-            MAX($XDAYS) OVER w AS max_x
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        f AS (
-          SELECT user_id, event_id, value,
-            avg_y + slope * (x + (max_x - min_x) / (n - 1) - avg_x) AS fc,
-            n, slope
-          FROM s)
+        $ForecastCtes
         SELECT user_id, event_id, value AS current_value, FLOOR((fc) * 10000 + 0.500001) / 10000 AS forecast_value
         FROM f
         WHERE n >= 30 AND slope IS NOT NULL AND fc < 40.0
@@ -204,11 +196,9 @@ object HealthQueries {
     Query(
       "q26_ml_detect_udaf",
       (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val detect = MLFunctions.detectAnomalies(30, 95.0)
         Tables.events(s, d)
-          .withColumn("report", detect(col("value")).over(w))
+          .withColumn("report", detect(col("value")).over(cumulative))
           .select(col("user_id"), col("event_id"),
             col("report.is_anomaly").as("is_anomaly"),
             graft.Num.r4(col("report.expected")).as("expected"),
@@ -218,17 +208,9 @@ object HealthQueries {
           .orderBy(col("user_id"), col("event_id"))
       },
       Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, value,
-            AVG(value) OVER w AS mu,
-            STDDEV_SAMP(value) OVER w AS sigma,
-            COUNT(value) OVER w AS n_training
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        $AnomalyStats
         SELECT user_id, event_id,
-          (n_training >= 30 AND sigma IS NOT NULL AND sigma > 0
-             AND ABS(value - mu) > $Z * sigma) AS is_anomaly,
+          $IsAnomaly AS is_anomaly,
           FLOOR((mu) * 10000 + 0.500001) / 10000 AS expected,
           CASE WHEN n_training >= 30 AND sigma IS NOT NULL AND sigma > 0
             THEN FLOOR((mu - $Z * sigma) * 10000 + 0.500001) / 10000 END AS lower,
@@ -245,12 +227,10 @@ object HealthQueries {
     Query(
       "q27_ml_forecast_udaf",
       (s, d) => {
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val fcast = MLFunctions.forecast(30, 1, 95.0)
         Tables.events(s, d)
           .withColumn("x", Health.tsDays(col("ts")))
-          .withColumn("forecasts", fcast(col("x"), col("value")).over(w))
+          .withColumn("forecasts", fcast(col("x"), col("value")).over(cumulative))
           .select(col("user_id"), col("event_id"), col("value"),
             explode(col("forecasts")).as("fc"))
           .select(col("user_id"), col("event_id"), col("value"),
@@ -262,37 +242,6 @@ object HealthQueries {
             graft.Num.r4(col("fc.aic")).as("aic"))
           .orderBy(col("user_id"), col("event_id"))
       },
-      Some(s"""
-        WITH s AS (
-          SELECT user_id, event_id, ts, value,
-            $XDAYS AS x,
-            COUNT(value) OVER w AS n,
-            REGR_SLOPE(value, $XDAYS) OVER w AS slope,
-            AVG($XDAYS) OVER w AS avg_x,
-            AVG(value) OVER w AS avg_y,
-            STDDEV_SAMP(value) OVER w AS sd_y,
-            CORR(value, $XDAYS) OVER w AS r,
-            MIN($XDAYS) OVER w AS min_x,
-            MAX($XDAYS) OVER w AS max_x
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        f AS (
-          SELECT user_id, event_id, value,
-            x + (max_x - min_x) / (n - 1) AS fts,
-            avg_y + slope * (x + (max_x - min_x) / (n - 1) - avg_x) AS fc,
-            (COALESCE(sd_y * sd_y, 0.0) * (n - 1) / n) * (1.0 - COALESCE(r * r, 0.0)) AS mse,
-            n, slope
-          FROM s)
-        SELECT user_id, event_id, value,
-          FLOOR((fts) * 1000000 + 0.500001) / 1000000 AS forecast_timestamp,
-          FLOOR((fc) * 10000 + 0.500001) / 10000 AS forecast_value,
-          FLOOR((fc - $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS lower_bound,
-          FLOOR((fc + $Z * SQRT(mse)) * 10000 + 0.500001) / 10000 AS upper_bound,
-          FLOOR((SQRT(mse)) * 10000 + 0.500001) / 10000 AS rmse,
-          FLOOR((CASE WHEN mse > 0 THEN n * LN(mse) + 4.0 END) * 10000 + 0.500001) / 10000 AS aic
-        FROM f
-        WHERE n >= 30 AND slope IS NOT NULL
-        ORDER BY user_id, event_id"""),
+      Some(ForecastSql),
       "M2 as custom typed Aggregator with exploded ARRAY<ROW> output, oracle-exact vs REGR_* SQL"))
 }

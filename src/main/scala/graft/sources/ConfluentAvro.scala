@@ -4,8 +4,8 @@ import graft.Schemas._
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.udf
 
 /** The reference's Kafka wire edge: Confluent-framed Avro
   * (magic byte 0x0 + 4-byte big-endian schema id + Avro binary body —
@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions.{col, udf}
   * here), and it would not strip the 5-byte header anyway
   * (SURVEY.md §7.4) — so the codec is built directly on org.apache.avro
   * with the health-event schema of `schema.tf:4-151`, surfaced as typed
-  * UDFs. The streaming entry composes
-  * `readStream.format("kafka")` → [[decodeHealthEvent]] and needs only
-  * the Kafka connector on the runtime classpath.
+  * UDFs. A Kafka source would compose
+  * `readStream.format("kafka")` → [[decodeHealthEvent]]; none ships
+  * until the spark-sql-kafka connector is part of the build.
   */
 object ConfluentAvro {
 
@@ -188,28 +188,4 @@ object ConfluentAvro {
     val f = udf((e: HealthEvent) => encode(e))
     f(event)
   }
-
-  /** S1 — the Kafka Avro source (`main.tf:170-185`, consumed at
-    * flink_statements.tf:123,181). Compiles against core Spark; running
-    * it needs the spark-sql-kafka connector on the classpath. */
-  def kafkaHealthStream(spark: SparkSession, servers: String, topic: String): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .load()
-      .select(decodeHealthEvent(col("value")).as("e"))
-      .select(col("e.*"))
-
-  /** S3 — the Kafka CTAS sink shape (flink_statements.tf:117,173,253,
-    * 299): re-frame rows as Confluent Avro and append to a topic.
-    * `df` must carry the HealthEvent columns. */
-  def kafkaHealthSink(df: DataFrame, servers: String, topic: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.select(encodeHealthEvent(org.apache.spark.sql.functions.struct(
-        col("event_id"), col("patient_id"), col("device_metadata"),
-        col("vitals"), col("event_time"))).as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 }

@@ -45,18 +45,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingLsh {
 
-  /** (doc_id, band, key) from a signatures frame — same packing as
-    * `Dedup.lshCandidates`. */
-  def banded(sigs: DataFrame): DataFrame = {
-    val rows = Dedup.K / Dedup.Bands
-    val bandKey = (b: Int) => (0 until rows)
-      .map(r => col(s"m${b * rows + r}") * math.pow(2, 31 * r).toLong)
-      .reduce(_ + _)
-    sigs.select(col("doc_id"), explode(array((0 until Dedup.Bands).map(b =>
-      struct(lit(b).as("band"), bandKey(b).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
   /** Signature-agreement Jaccard estimate between `a.mK` and `b.mK`. */
   private def estJaccard: Column =
     (0 until Dedup.K).map(k =>
@@ -75,7 +63,7 @@ object StreamingLsh {
     * path for an existing corpus. */
   def primeIndex(sigs: DataFrame, root: String): Unit = {
     StreamingSetJoin.appendBucketed(sigs, sigsDir(root), "db", "doc_id")
-    StreamingSetJoin.appendBucketed(banded(sigs), bandsDir(root), "bb", "key")
+    StreamingSetJoin.appendBucketed(Dedup.bandKeys(sigs), bandsDir(root), "bb", "key")
   }
 
   def start(docs: DataFrame, sigDir: String, verdictDir: String,
@@ -91,7 +79,7 @@ object StreamingLsh {
           // one shingle pass per batch; signatures feed bands, the
           // pair-estimate join, and the index append
           val sigs = Dedup.minhashSignatures(b).localCheckpoint()
-          val newB = banded(sigs).localCheckpoint()
+          val newB = Dedup.bandKeys(sigs).localCheckpoint()
           // the batch's colliding band buckets — bounded by the index's
           // LIVE bucket count (manifest-backed, rescalable)
           val bandB = StreamingSetJoin.bucketCount(spark, bandsDir(sigDir))

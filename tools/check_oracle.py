@@ -49,6 +49,11 @@ def main(sf_dir, out_dir):
             p = f"{p}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        # an empty dump (e.g. a Verify run that selected no query) must
+        # not read as a clean "0/0 queries match"
+        print(f"FAIL: {out_dir}/oracle_sql.json has no entries")
+        return 1
     failures = 0
     for name, sql in sorted(oracle.items()):
         try:
