@@ -242,65 +242,56 @@ object Dedup {
 
   /** Transitive near-dup clusters: (doc_id, cluster_id, cluster_size),
     * cluster_id = the smallest doc_id reachable through the undirected
-    * verified-pair graph. CC runs on the REP graph (exact-dup groups
-    * collapsed), so a corpus with heavy verbatim duplication contributes
-    * no extra edges; membership expansion afterwards is one linear join.
-    * Computed the way web-scale pipelines do it — iterative min-label
-    * propagation (Hash-to-Min family) with pointer doubling
-    * (O(log diameter) rounds); every frame in the loop is EDGE-sized,
-    * never corpus-sized, and each round is localCheckpoint-truncated (a
-    * loop that only persists grows each round's plan with the whole
-    * previous lineage — measured 27 s at sf0.1). Shared by q84 and the
-    * q164 dedup-aware split. */
+    * verified-pair graph: the REP graph (exact-dup groups collapsed, so
+    * verbatim duplication adds no pair edges) plus a star edge from each
+    * group's rep to its other members, so every clustered doc is labelled
+    * directly. Hash-to-Min (Rastogi et al., ICDE 2013): each node keeps C,
+    * a sorted distinct id array, first its closed neighbourhood; a round
+    * sends C to min(C) and [min(C)] to every member of C, and the new C is
+    * the union of what a node receives — one shuffle per round, O(log
+    * diameter) rounds (6 on a 32-node path); each component's min node
+    * collects the component's ids. The loop stops on the round after
+    * which every node is SETTLED (min of its own C, or C one id): that
+    * state is a fixpoint, since every node sits in some C, a settled min
+    * m in no other min's C (that min would sit in C_m below m) and a node
+    * with C = {m} in C_m only. The unsettled count comes off each round's
+    * eager localCheckpoint job through an Observation, so convergence
+    * costs no job; the checkpoint keeps each plan one round deep (a loop
+    * that only persists grows every plan by the whole previous lineage —
+    * measured 27 s at sf0.1). Shared by q84 and the q164 split. */
   private[ext] def clusterLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val idx = repCollapse(s, d)
-    val (pairs, memb) = (verifiedPairs(idx), idx.memb)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("doc")).distinct()
-      .select(col("doc"), col("doc").as("lbl")).localCheckpoint()
-    var moved = 1L
+    val edges = verifiedPairs(idx).union(idx.memb
+      .filter(col("doc_id") =!= col("rep"))
+      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b")))
+    def idSet(c: Column): Column = array_sort(array_distinct(c))
+    var state = edges.select(col("doc_a").as("doc"), col("doc_b").as("nbr"))
+      .union(edges.select(col("doc_b"), col("doc_a")))
+      .groupBy(col("doc"))
+      .agg(idSet(concat(array(col("doc")), collect_list(col("nbr")))).as("c"))
+    val lo = array_min(col("c"))
+    var unsettled = 0L
     var rounds = 0
-    while (moved > 0 && rounds < 64) {
-      val nbrMin = edges
-        .join(labels.select(col("doc").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      val half = labels
-        .join(nbrMin.withColumnRenamed("src", "doc"), Seq("doc"), "left")
-        .select(col("doc"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-      // pointer doubling: also adopt the label OF the current label,
-      // turning O(diameter) convergence into O(log diameter) — the
-      // chain case (A~B~C~...~Z) otherwise costs one Spark job per
-      // hop, which dominates wall time long before data size does
-      val next = half
-        .join(half.select(col("doc").as("lbl"), col("lbl").as("lbl2")),
-          Seq("lbl"), "left")
-        .select(col("doc"),
-          least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl"))
+    do {
+      val obs = org.apache.spark.sql.Observation()
+      state = state.select(lo.as("doc"), col("c"))
+        .union(state.select(explode(col("c")), array(lo)))
+        .groupBy(col("doc")).agg(idSet(flatten(collect_list(col("c")))).as("c"))
+        .observe(obs, count(when(lo =!= col("doc") && size(col("c")) > 1, 1)).as("unsettled"))
         .localCheckpoint()
-      moved = next
-        .join(labels.withColumnRenamed("lbl", "prev"), Seq("doc"))
-        .filter(col("lbl") < col("prev")).count()
-      labels = next
+      // the listener bus delivers the metric after the job ends; a Spark
+      // that stops filling it fails here instead of hanging the loop
+      unsettled = scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(5, "min")).getLong(0)
       rounds += 1
-    }
-    // expand rep labels to members; exact-dup groups of >= 2 docs
-    // whose rep has no cross-group partner are clusters on their own
-    // (identical texts are mutual near-dups, J = 1)
-    val lonely = memb.groupBy(col("rep")).agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2)
-      .join(labels.withColumnRenamed("doc", "rep"), Seq("rep"), "left_anti")
-      .select(col("rep").as("doc"), col("rep").as("lbl"))
-    val docLabels = memb
-      .join(labels.union(lonely).withColumnRenamed("doc", "rep"), Seq("rep"))
-      .select(col("doc_id"), col("lbl"))
-    val sizes = docLabels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    docLabels.join(sizes, Seq("lbl"))
-      .select(col("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))
+    } while (unsettled > 0 && rounds < 64)
+    if (unsettled > 0)
+      throw new IllegalStateException(
+        s"clusterLabels: $unsettled nodes still unsettled after $rounds rounds, the cap")
+    state.select(col("doc").as("doc_id"), lo.as("cluster_id"))
+      .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
   }
 
   /** The q84 oracle's CTE chain through per-doc cluster ids — verified
@@ -691,7 +682,7 @@ object Dedup {
         SELECT c.doc AS doc_id, c.cluster_id, s.cluster_size
         FROM clusters c JOIN sizes s USING (cluster_id)
         ORDER BY doc_id"""),
-      "transitive near-dup clusters: iterative min-label connected components over verified pairs (edge-sized frames only)"),
+      "transitive near-dup clusters: Hash-to-Min connected components over verified pairs, one shuffle per round (edge-sized frames only)"),
 
     // ---------------------------------------------------------------- q89
     // The composed curation pass a pre-training pipeline actually ships:

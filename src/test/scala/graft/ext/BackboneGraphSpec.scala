@@ -1,8 +1,6 @@
 package graft.ext
 
 import graft.{Registry, SparkSpec, Tables}
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Pins for the iterative backbone-graph queries that run inside one
   * task ([[graft.functions.BackboneGraph]]): building their plans must
@@ -30,18 +28,6 @@ class BackboneGraphSpec extends SparkSpec {
         Seq((ok, u, 7L), (ok, v, 7L))
       }
     }.toDF("l_orderkey", "l_suppkey", "l_partkey")
-  }
-
-  /** Jobs started while `body` runs, counted by a SparkListener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerDrain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(counter)
-    try { body; ListenerDrain(sc); n.get } finally sc.removeSparkListener(counter)
   }
 
   test("building a ported graph plan starts no more jobs than a bare lineitem read") {
